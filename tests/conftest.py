@@ -10,13 +10,35 @@ FIXTURES = "/root/reference/fixtures"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tmdataloader-tests", shuffle_partitions=8)
+    # Spark renders a plan description for the (disabled) UI on every
+    # action and adaptive re-plan; the "simple" form skips the
+    # per-operator detail section, which dominates on the large
+    # clinical load and merge plans.  Results are unaffected.
+    s = get_spark(
+        "tmdataloader-tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.ui.explainMode": "simple"},
+    )
     yield s
 
 
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(autouse=True)
+def _drop_cached_frames():
+    """Uncache every DataFrame when a test ends.  A cached frame keeps
+    its whole logical and physical plan alive in the driver, and the
+    clinical load and merge plans are large enough that one test
+    file's worth of them fills the driver heap."""
+    yield
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.catalog.clearCache()
 
 
 # ---- scratch PostgreSQL (shared by the COPY-sink and SQL-script-runner

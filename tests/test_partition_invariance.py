@@ -14,8 +14,8 @@ not 6dp rounding — between:
   files fan out into several scan tasks, changing partial-agg order).
 
 Runs at sf0.001 so the whole 88-query sweep stays minutes, not hours;
-the cross-engine (DuckDB) check at sf0.01 lives in the driver window +
-tests/test_oracle_tail.py. Spark-vs-Spark order-invariance at ANY sf
+the cross-engine (DuckDB) check at sf0.01 lives in
+tests/test_oracle.py. Spark-vs-Spark order-invariance at ANY sf
 is exactly what rounding-based checks cannot see, which is why this
 compares exact bits.
 """

@@ -4,7 +4,7 @@
 fraction signal (llmdata/dedup.py dup_ngram_fraction).
 
 The gate queries for all three are oracle-checked per pytest run by
-tests/test_oracle_tail.py; these tests pin the semantic invariants on
+tests/test_oracle.py; these tests pin the semantic invariants on
 constructed inputs where the expected answer is derivable by hand.
 """
 

@@ -14,6 +14,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half of the host's MemTotal in whole GB (at least 1g), so the
+    driver JVM leaves room for the Python workers and the OS."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "1g"
+    return f"{max(kb // 2 // 1024**2, 1)}g"
+
+
 def get_spark(
     app_name: str = "tmdataloader_spark",
     master: str | None = None,
@@ -30,8 +41,11 @@ def get_spark(
       tests; on a real cluster this is overridden (or left to AQE's
       coalescing with a high initial value).
     - Arrow enabled so any Pandas-UDF exchange is columnar.
+    - Driver heap from ``SPARK_GRAFT_DRIVER_MEM``, else
+      :func:`default_driver_memory`.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -51,7 +65,7 @@ def get_spark(
         # try_cast so it is correct under ANSI defaults too.
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -109,8 +109,8 @@ def sessionize_batch(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     is bit-identical regardless of partition count or partial-agg
     order.  A raw double ``F.sum`` is order-sensitive (float addition
     is not associative) and rounding the final sum to 6dp does NOT
-    remove boundary flips, which is exactly what the round-4 driver
-    caught (CORRECTNESS_r04 hash_match=false)."""
+    remove boundary flips, which is exactly what the oracle check
+    caught at sf0.01."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
     prev = F.lag(us).over(w)

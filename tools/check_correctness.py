@@ -1,13 +1,13 @@
-"""Local twin of the driver's correctness gate: run every
+"""Oracle check for the gate queries: run each
 ``__spark_entry__.queries()`` entry on Spark AND its
 ``oracle_sql()`` twin on DuckDB at the same sf, then compare
-row count + column names + COLUMN TYPES + order-insensitive values.
+column names + COLUMN TYPES + row count + order-insensitive values.
 
-The type check exists because the driver's value hash is
-type-sensitive at the Arrow level: rounds 4-5 each lost queries whose
-values were bit-identical but whose DuckDB oracle emitted HUGEINT
-(integer ``sum()`` widening) where Spark emits bigint.  Any oracle
-column whose DuckDB type has no matching Spark type here fails BEFORE
+The type check comes first because a result is only interchangeable
+if it is the same at the Arrow level: DuckDB widens integer ``sum()``
+to HUGEINT, which Arrow exports as decimal128(38,0), so bit-identical
+values can still hash differently from Spark's bigint.  Any oracle
+column whose DuckDB type has no matching Spark type fails BEFORE
 values are compared — HUGEINT always fails with a CAST hint.
 
 Value comparison is float-hex exact (``float.hex()``; ``-0.0``
@@ -15,7 +15,7 @@ distinct from ``0.0``), not 6dp-rounded: the partition-invariance
 test already holds every query to bit-exactness, so the oracle twin
 should too.
 
-Usage: python tools/check_correctness.py [--types-only] [sf_dir] [query ...]
+Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -33,17 +33,13 @@ TABLES = [
     "lineitem", "events", "documents", "embeddings",
 ]
 
-#: DuckDB type (upper, parameter-free) -> Spark dtypes the driver's
-#: Arrow-level hash treats as the same physical type.  HUGEINT is
-#: deliberately absent: it means an integer sum() the oracle forgot to
-#: CAST(... AS BIGINT).
-#: All 64-bit-or-narrower integer types hash identically driver-side
-#: (both engines surface them as plain Python ints), so widths are one
-#: equivalence class — verified empirically: html_extract/fuzzy_dedup/
-#: simhash_pairs/text_quality/token_count are driver-green with oracle
-#: BIGINT vs Spark int.  HUGEINT is NOT in the class: Arrow has no
-#: int128, so DuckDB exports it as decimal128(38,0) and the driver's
-#: hash sees Decimal vs int — exactly the r5 failure mode.
+#: DuckDB type (upper, parameter-free) -> Spark dtypes that compare
+#: as the same physical type.  HUGEINT is deliberately absent: it means
+#: an integer sum() the oracle forgot to CAST(... AS BIGINT).
+#: All 64-bit-or-narrower integer types surface as plain Python ints in
+#: both engines, so widths are one equivalence class.  HUGEINT is NOT
+#: in the class: Arrow has no int128, so DuckDB exports it as
+#: decimal128(38,0), a Decimal where Spark gives an int.
 _INTS = {"tinyint", "smallint", "int", "bigint"}
 _DUCK_TO_SPARK = {
     "BOOLEAN": {"boolean"},
@@ -71,10 +67,10 @@ def _spark_types_for(duck_type: str) -> set[str]:
 
 
 def is_complex_dtype(dtype: str) -> bool:
-    """True for Spark/DuckDB output types the driver's pandas
-    canonicalizer cannot sort (``sort_values`` over list/dict values
-    raises ``unhashable type``) — the r6 ``random_projection``
-    failure mode.  Gate queries must emit only scalar columns."""
+    """True for Spark/DuckDB output types a row-sorting canonicalizer
+    cannot order (pandas ``sort_values`` over list/dict values raises
+    ``unhashable type``).  Gate queries must emit only scalar
+    columns."""
     t = str(dtype).lower().replace(" ", "")
     return (
         t.endswith("[]")
@@ -91,15 +87,15 @@ def check_types(spark_dtypes, duck_cols, duck_types) -> str | None:
         if is_complex_dtype(dtype):
             problems.append(
                 f"{col}: spark output type {dtype} is ARRAY/MAP/STRUCT — "
-                f"the driver's pandas canonicalizer cannot sort it "
-                f"(r6 random_projection failure); flatten to scalar columns"
+                f"rows cannot be canonicalized by sorting; flatten to "
+                f"scalar columns"
             )
     for col, dtype in zip(duck_cols, duck_types):
         t = str(dtype).upper().strip()
         if is_complex_dtype(t):
             problems.append(
                 f"{col}: oracle type {t} is a LIST/STRUCT/MAP — "
-                f"flatten to scalar columns (driver cannot canonicalize)"
+                f"flatten to scalar columns"
             )
             continue
         allowed = _spark_types_for(t)
@@ -156,31 +152,20 @@ def oracle_connection(sf_dir: str):
     return con
 
 
-def check_query(
-    spark, con, name: str, sf_dir: str, types_only: bool = False
-) -> str | None:
+def check_query(spark, con, name: str, sf_dir: str) -> str | None:
     """Run one gate query on Spark and its oracle on DuckDB, compare
     (columns, types, rowcount, order-insensitive float-hex values).
-    Returns None on match, else a failure description. Importable —
-    pytest uses this to oracle-check the queries outside the driver's
-    window.  ``types_only`` skips execution: it builds the Spark plan
-    and DESCRIBEs the oracle, comparing schemas only (fast sweep for
-    the HUGEINT class)."""
+    Returns None on match, else a failure description.  Importable —
+    tests/test_oracle.py runs it over every query."""
     import __spark_entry__ as entry
 
-    fn = entry.queries()[name]
-    oracles = entry.oracle_sql()
-    sdf = fn(spark, sf_dir)
+    sdf = entry.queries()[name](spark, sf_dir)
     scols = sdf.columns
-    if name not in oracles:
-        return None  # rows-only query
-    rel = con.sql(oracles[name])
+    rel = con.sql(entry.oracle_sql()[name])
     dcols = list(rel.columns)
     terr = check_types(sdf.dtypes, dcols, rel.types)
     if terr:
         return f"types: {terr}"
-    if types_only:
-        return None
     srows = sdf.collect()
     drows = rel.fetchall()
     sc, sv = normalize([tuple(r) for r in srows], scols)
@@ -196,8 +181,7 @@ def check_query(
 
 
 def main():
-    argv = [a for a in sys.argv[1:] if a != "--types-only"]
-    types_only = "--types-only" in sys.argv[1:]
+    argv = sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
@@ -219,7 +203,7 @@ def main():
         if only and name not in only:
             continue
         try:
-            err = check_query(spark, con, name, sf_dir, types_only=types_only)
+            err = check_query(spark, con, name, sf_dir)
         except Exception as e:
             err = f"error: {e}"
         if err:

@@ -1,12 +1,11 @@
 """Dump ``explain("formatted")`` for every (or a subset of) gate
-query to ``plans/$SPARK_GRAFT_PLAN_ROUND/<query>_<tag>.txt`` (default r15) — the before/after evidence
-files the optimization round commits alongside code changes.
+query to ``OUT_DIR/<query>.txt``.
 
 Plan capture is driver-side only (no job execution): each query
 function builds its DataFrame lazily and we print the pre-execution
 formatted plan.
 
-Usage: python tools/explain_dump.py <tag> [sf_dir] [query ...]
+Usage: python tools/explain_dump.py OUT_DIR [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -18,7 +17,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    out_dir = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     names = sys.argv[3:]
 
@@ -26,18 +27,13 @@ def main() -> None:
     from tmdataloader_spark.session import get_spark
 
     spark = get_spark("explain_dump")
-    round_dir = os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r15")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", round_dir,
-    )
     os.makedirs(out_dir, exist_ok=True)
 
     qs = entry.queries()
     if names:
         qs = {n: qs[n] for n in names}
     for name, fn in qs.items():
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         try:
             df = fn(spark, sf_dir)
             jdf = df._jdf
