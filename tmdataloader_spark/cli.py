@@ -161,9 +161,11 @@ def _study_trials(loaded) -> list[str]:
 
 
 def merge_study_into_warehouse(
-    wh: StudyWarehouse, loaded, spark: SparkSession
+    wh: StudyWarehouse, loaded, trials: list[str]
 ) -> StudyWarehouse:
-    """Fold one StudyLoadResult's frames into the warehouse."""
+    """Fold one StudyLoadResult's frames into the warehouse.
+    ``trials`` is ``_study_trials(loaded)``, which the caller has
+    already computed for its conflict checks."""
     from tmdataloader_spark.plans.study import _HDD_ROUTE, _SERIAL_HDD_ROUTE
 
     # Drop each trial at most once, BEFORE merging any data type: a
@@ -172,7 +174,7 @@ def merge_study_into_warehouse(
     # rows tagged with the trial — dropping inside the per-ptype loop
     # would wipe the frames the previous ptype just merged, leaving
     # only the last data type loaded.
-    for trial in _study_trials(loaded):
+    for trial in trials:
         wh = _drop_study(wh, trial)
     for ptype, res in loaded.results.items():
         for attr, target in [
@@ -482,7 +484,7 @@ def main(argv: list[str] | None = None) -> int:
                         print(">>> STOP ON FAIL", file=sys.stderr)
                         return 1
                     continue
-                wh = merge_study_into_warehouse(wh, loaded, spark)
+                wh = merge_study_into_warehouse(wh, loaded, trials)
                 # post-study security tail
                 # (i2b2_create_security_for_trial.sql:130-190 +
                 # PostStudyProcessor.groovy:30-42)

@@ -18,6 +18,15 @@ Scale notes: the fact side is the only big frame; every dimension
 magnitude smaller and joins broadcast. The single wide shuffle left is
 the type-inference groupBy — keyed by concept group, which is the
 natural partitioning for all later per-concept work.
+
+The work frame is a working table that holds its data, like the
+reference's ``wrk_clinical_data``: ``localCheckpoint`` materializes it
+once after dedup (stages 1-4, read by the abort guards) and once more
+with each row's leaf path stored (stage 5a), so every later plan starts
+from a one-line scan. The reason is plan text, not compute: Spark
+renders a plan's text on every action and adaptive re-plan, and a
+cached frame prints its whole melt+cleanse plan, with the nested
+leaf-path ``CASE WHEN`` expressions, in every consumer.
 """
 
 from __future__ import annotations
@@ -204,12 +213,17 @@ def _substitute_placeholders():
 
 
 def _rename_timestamp_leaf(leaf_col):
-    r"""Timestamp-variable leaf rename (shared by build_trial_nodes and
-    fact assembly — the two MUST stay expression-identical or facts
-    fall out of the node join): when the row carries a baseline, the
-    last path component (the raw timestamp) becomes the timepoint
-    interval label vs that baseline ('Baseline', '1 minute', ...;
-    functions/timepoints.timestamp_to_timepoint, X4)."""
+    r"""Timestamp-variable leaf rename: when the row carries a
+    baseline, the last path component (the raw timestamp) becomes the
+    timepoint interval label vs that baseline ('Baseline', '1 minute',
+    ...; functions/timepoints.timestamp_to_timepoint, X4).
+
+    ``load_clinical`` applies it once per work row, to the stored
+    ``_leaf_raw`` attribute, and materializes the result as
+    ``leaf_node``; trial nodes and facts both read that column, so
+    they cannot disagree on a leaf. Pass an attribute, not a composed
+    expression: the helper references its argument several times, so
+    a composed argument is copied into the plan text at every use."""
     renamed = replace_last_path_component(
         leaf_col,
         timestamp_to_timepoint(
@@ -220,15 +234,16 @@ def _rename_timestamp_leaf(leaf_col):
     return F.when(F.col("baseline_value").isNotNull(), renamed).otherwise(leaf_col)
 
 
-def build_trial_nodes(df: DataFrame, top_node: str) -> DataFrame:
-    r"""Stage 5b (:758-798): distinct leaf paths with placeholders
-    substituted; numeric leaves omit DATAVALUE; ``\\``-runs collapse;
-    Timestamp leaves renamed via timestamp_to_timepoint."""
-    subst = _substitute_placeholders()
-    leaf = F.concat(F.lit(top_node), subst, F.lit("\\"))
-    leaf = F.regexp_replace(leaf, r"(\\){2,}", "\\\\")
+def build_trial_nodes(df: DataFrame) -> DataFrame:
+    r"""Stage 5b (:758-798): distinct leaf paths per node key; numeric
+    leaves omit DATAVALUE; Timestamp leaves carry their timepoint label
+    (``df`` holds ``_leaf_raw`` and ``leaf_node`` from
+    ``load_clinical``). Distinct runs over the raw leaf too, so the
+    rows are those of a distinct over the raw leaf followed by the
+    rename: two raw stamps with one label stay two rows."""
     nodes = df.select(
-        leaf.alias("leaf_node"),
+        "_leaf_raw",
+        "leaf_node",
         "category_cd",
         "visit_name",
         "data_label",
@@ -238,12 +253,9 @@ def build_trial_nodes(df: DataFrame, top_node: str) -> DataFrame:
         "data_type",
         "valuetype_cd",
         "baseline_value",
-    ).distinct()
-    # Timestamp variables: leaf renamed to the timepoint interval label
+    ).distinct().drop("_leaf_raw")
     has_baseline = F.col("baseline_value").isNotNull()
     nodes = nodes.withColumn(
-        "leaf_node", _rename_timestamp_leaf(F.col("leaf_node"))
-    ).withColumn(
         "valuetype_cd",
         F.when(has_baseline, F.lit("TIMEPOINT")).otherwise(F.col("valuetype_cd")),
     )
@@ -294,10 +306,10 @@ def load_clinical(
         "site_id", "subject_id", "visit_name", "data_label", "category_cd", "data_value",
     ]
     work = dedup_keep_one(work, key_cols)
-    # ONE materialization of the cleansed frame serves both abort
-    # guards and the node/patient/fact builds below — without it each
-    # guard re-runs the full melt+cleanse lineage as its own job
-    work = work.cache()
+    # the cleansed working table, read by both abort guards; a
+    # checkpoint, not a cache, so later plans hold a one-line scan
+    # instead of the melt+cleanse plan (Scale notes)
+    work = work.localCheckpoint()
     if check_duplicates:
         numeric = work.filter(F.col("data_type") == "N")
         assert_no_duplicates(
@@ -307,10 +319,17 @@ def load_clinical(
         )
         assert_visit_name_consistency(work)
 
-    # narrow projection on top of the cached frame
+    # Stage 5a: each row's leaf path, computed once and stored in the
+    # working table that the nodes and the facts both read
     work = inject_placeholders(work)
+    leaf = F.concat(F.lit(top_node), _substitute_placeholders(), F.lit("\\"))
+    work = (
+        work.withColumn("_leaf_raw", F.regexp_replace(leaf, r"(\\){2,}", "\\\\"))
+        .withColumn("leaf_node", _rename_timestamp_leaf(F.col("_leaf_raw")))
+        .localCheckpoint()
+    )
 
-    trial_nodes = build_trial_nodes(work, top_node)
+    trial_nodes = build_trial_nodes(work)
     patients = build_patient_dimension(work, trial_id)
 
     # Stage 7: ontology — every leaf's prefixes become nodes (T1)
@@ -370,17 +389,8 @@ def load_clinical(
         "sourcesystem_cd",
     )
 
-    # Stage 8: fact assembly (J1) — rebuild each fact's leaf path, then
-    # join nodes (broadcast: node count ≪ fact count) and patients.
-    subst = _substitute_placeholders()
-    leaf = F.regexp_replace(F.concat(F.lit(top_node), subst, F.lit("\\")), r"(\\){2,}", "\\\\")
-    # Timestamp leaves were renamed to timepoint labels in
-    # build_trial_nodes — rename the fact's leaf IDENTICALLY or every
-    # timestamp fact silently falls out of the inner node join
-    # (ClinicalDataProcessorTest.groovy:860-954 counts patients at
-    # '\Baseline\'/'\1 minute\' nodes)
-    leaf = _rename_timestamp_leaf(leaf)
-    facts_raw = work.withColumn("leaf_node", leaf)
+    # Stage 8: fact assembly (J1) — join each fact's stored leaf to the
+    # nodes (broadcast: node count ≪ fact count) and patients.
     node_keys = F.broadcast(
         trial_nodes.select("leaf_node").distinct().join(
             concept_dim.select(
@@ -390,7 +400,7 @@ def load_clinical(
         )
     )
     facts = (
-        facts_raw.join(node_keys, on="leaf_node", how="inner")
+        work.join(node_keys, on="leaf_node", how="inner")
         .join(
             F.broadcast(
                 patients.select(
