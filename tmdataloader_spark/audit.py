@@ -18,6 +18,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tmdataloader_spark.session import local_frame
+
 
 @dataclass
 class JobStep:
@@ -69,13 +71,15 @@ class AuditLog:
                 j.end_ts = time.time()
 
     def job_master(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(j.job_id, j.procedure, j.status) for j in self.jobs],
             "job_id int, procedure string, status string",
         )
 
     def job_audit(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (s.job_id, s.seq_id, s.procedure, s.step_desc, s.records, s.status)
                 for s in self.steps
@@ -85,6 +89,4 @@ class AuditLog:
         )
 
     def job_errors(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            list(self.errors) or [], "job_id int, message string"
-        )
+        return local_frame(spark, self.errors, "job_id int, message string")

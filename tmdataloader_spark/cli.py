@@ -11,6 +11,15 @@ replacement for the reference's Postgres/Oracle schema): core i2b2
 frames at the root, per-omics matrices under ``deapp/``. Uploading a
 study REPLACES that study's rows (delete-by-study + append — the same
 partition-overwrite semantics as plans/hdd.write_partitioned).
+
+A missing core table opens as an empty in-JVM frame
+(``session.local_frame``), which Catalyst drops from the study's union.
+So on a first upload into an empty warehouse a parquet column takes the
+study frame's nullability and can be written ``not null`` (e.g.
+``observation_fact.patient_num``, ``i2b2.c_hlevel``,
+``concept_counts.patient_count``).  Spark reads parquet columns as
+nullable and a re-upload unions with the stored table, so no Spark
+reader or later upload sees a difference.
 """
 
 from __future__ import annotations
@@ -29,6 +38,7 @@ from tmdataloader_spark.plans.operations import (
     move_study_by_path,
     normalize_path,
 )
+from tmdataloader_spark.session import local_frame
 
 __version__ = "0.3.0"
 
@@ -63,7 +73,7 @@ def read_warehouse(spark: SparkSession, wh_dir: str) -> StudyWarehouse:
         p = os.path.join(wh_dir, f"{name}.parquet")
         if os.path.exists(p):
             return spark.read.parquet(p)
-        return spark.createDataFrame([], CORE_SCHEMAS[name])
+        return local_frame(spark, [], CORE_SCHEMAS[name])
 
     def table_dir(sub: str) -> dict[str, DataFrame]:
         d = os.path.join(wh_dir, sub)
@@ -508,7 +518,8 @@ def main(argv: list[str] | None = None) -> int:
                     if args.copy_security_settings_from:
                         access = wh.searchapp.get(
                             "search_auth_sec_object_access"
-                        ) or spark.createDataFrame(
+                        ) or local_frame(
+                            spark,
                             [],
                             "auth_sec_obj_access_id long, auth_principal_id long, "
                             "secure_object_id long, secure_access_level_id long",

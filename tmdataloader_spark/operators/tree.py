@@ -25,6 +25,7 @@ from tmdataloader_spark.functions.paths import (
     path_hlevel,
     path_prefixes_expr,
 )
+from tmdataloader_spark.session import local_frame
 
 
 def fill_in_tree(leaves: DataFrame, path_col: str = "path") -> DataFrame:
@@ -191,7 +192,8 @@ def add_nodes(
         )
         for p in new_paths
     ]
-    add = spark.createDataFrame(
+    add = local_frame(
+        spark,
         rows,
         "c_fullname string, c_hlevel int, c_name string, c_basecode string, "
         "valtype_cd string, sourcesystem_cd string",
@@ -220,8 +222,8 @@ def add_root_node(
     path = f"\\{root_name}\\"
     exists = i2b2.filter(F.col("c_fullname") == path).limit(1).count() > 0
     if not exists:
-        row = spark.createDataFrame(
-            [(path, 0, root_name)], "c_fullname string, c_hlevel int, c_name string"
+        row = local_frame(
+            spark, [(path, 0, root_name)], "c_fullname string, c_hlevel int, c_name string"
         )
         for c in i2b2.columns:
             if c not in row.columns:
@@ -232,8 +234,8 @@ def add_root_node(
     if table_access is not None:
         if table_access.filter(F.col("c_fullname") == path).limit(1).count() == 0:
             table_access = table_access.unionByName(
-                spark.createDataFrame(
-                    [(path, root_name)], "c_fullname string, c_name string"
+                local_frame(
+                    spark, [(path, root_name)], "c_fullname string, c_name string"
                 ).select(table_access.columns)
             )
     return i2b2, table_access
@@ -399,18 +401,21 @@ def register_secure_study(
     spark = i2b2.sparkSession
     token = f"EXP:{trial_id}"
     if secure_objects is None:
-        secure_objects = spark.createDataFrame(
+        secure_objects = local_frame(
+            spark,
             [],
             "search_secure_object_id long, bio_data_id long, "
             "display_name string, data_type string, bio_data_unique_id string",
         )
     if bio_experiment is None:
-        bio_experiment = spark.createDataFrame(
-            [], "bio_experiment_id long, title string, accession string, etl_id string"
+        bio_experiment = local_frame(
+            spark,
+            [],
+            "bio_experiment_id long, title string, accession string, etl_id string",
         )
     if bio_data_uid is None:
-        bio_data_uid = spark.createDataFrame(
-            [], "unique_id string, bio_data_type string, accession string"
+        bio_data_uid = local_frame(
+            spark, [], "unique_id string, bio_data_type string, accession string"
         )
     exists = (
         secure_objects.filter(F.col("bio_data_unique_id") == token).limit(1).count()
@@ -435,7 +440,8 @@ def register_secure_study(
             "bio_experiment_id", F.xxhash64("accession")
         )
     if bio_experiment.filter(F.col("accession") == trial_id).limit(1).count() == 0:
-        stub = spark.createDataFrame(
+        stub = local_frame(
+            spark,
             [("Metadata not available", trial_id, f"METADATA:{trial_id}")],
             "title string, accession string, etl_id string",
         ).withColumn("bio_experiment_id", F.xxhash64("accession"))
@@ -449,7 +455,8 @@ def register_secure_study(
     )
     # the EXP uid row (novelty upsert on unique_id)
     if bio_data_uid.filter(F.col("unique_id") == token).limit(1).count() == 0:
-        uid = spark.createDataFrame(
+        uid = local_frame(
+            spark,
             [(token, "EXP", trial_id)],
             "unique_id string, bio_data_type string, accession string",
         )

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tmdataloader_spark.operators.dedup import LoadValidationError
 from tmdataloader_spark.plans.hdd import build_hdd_nodes, build_sample_mapping
+from tmdataloader_spark.session import local_frame
 from tmdataloader_spark.sources.gpl import GplPlatform
 from tmdataloader_spark.sources.tsv import read_head_meta
 
@@ -170,13 +171,15 @@ def load_gwas_plink(
             data = fh.read()
         return compress(data) if codec == "lzo" else data
 
-    plink = spark.createDataFrame(
+    plink = local_frame(
+        spark,
         [(study_id, blob(bed), blob(bim), blob(fam), codec)],
         "study_id string, bed binary, bim binary, fam binary, codec string",
     )
 
     category_cd = meta.get("CATEGORY_CD") or "GWAS+GWAS Plink"
-    mapping = spark.createDataFrame(
+    mapping = local_frame(
+        spark,
         [
             (study_id, None, sid, sid, "", None, None, None, category_cd, "STD")
             for sid in subject_ids

@@ -20,6 +20,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tmdataloader_spark.operators.dedup import LoadValidationError
+from tmdataloader_spark.session import local_frame
 from tmdataloader_spark.sources.tsv import read_tsv
 
 #: MetaDataProcessor.groovy:154-190 — (?i) header regexp -> field
@@ -250,14 +251,15 @@ def build_study_folders(
         F.lit(program_id).cast("long").alias("parent_id"),
         "description",
     )
-    fm_folder = spark.createDataFrame(new_folders, folder_schema).unionByName(studies)
+    fm_folder = local_frame(spark, new_folders, folder_schema).unionByName(studies)
     fm_folder_association = todo.select(
         "folder_id",
         F.col("unique_id").alias("object_uid"),
         F.lit("org.transmart.biomart.Experiment").alias("object_type"),
     )
     if tag_item_id is None:
-        am_tag_association = spark.createDataFrame(
+        am_tag_association = local_frame(
+            spark,
             [],
             "subject_uid string, object_uid string, object_type string, "
             "tag_item_id int",
@@ -329,7 +331,8 @@ def _split_links(
             .filter(F.coalesce(F.col(name_col), F.lit("")) != "")
         )
     else:
-        exploded = landing.sparkSession.createDataFrame(
+        exploded = local_frame(
+            landing.sparkSession,
             [], f"accession string, {name_col} string"
         )
     dim = (

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from tmdataloader_spark.operators.dedup import LoadValidationError
 from tmdataloader_spark.operators.tree import concept_counts as compute_concept_counts
+from tmdataloader_spark.session import local_frame
 
 
 @dataclass
@@ -358,7 +359,8 @@ def move_study_by_path(
 
     # new root node (:245-263)
     if i2b2.filter(F.col("c_fullname") == new_root).limit(1).count() == 0:
-        root_row = spark.createDataFrame(
+        root_row = local_frame(
+            spark,
             [(new_root, 0, new_root_name, None, None, None)],
             "c_fullname string, c_hlevel int, c_name string, c_basecode string, "
             "valtype_cd string, sourcesystem_cd string",
@@ -369,7 +371,9 @@ def move_study_by_path(
         i2b2 = i2b2.unionByName(root_row.select(i2b2.columns))
         if table_access is not None:
             table_access = table_access.unionByName(
-                spark.createDataFrame([(new_root, new_root_name)], "c_fullname string, c_name string")
+                local_frame(
+                    spark, [(new_root, new_root_name)], "c_fullname string, c_name string"
+                )
             )
 
     # childless old root removed (:264-303)
@@ -439,7 +443,8 @@ def move_study_by_path(
             )
             for p in missing
         ]
-        add = spark.createDataFrame(
+        add = local_frame(
+            spark,
             rows,
             "c_fullname string, c_hlevel int, c_name string, c_basecode string, "
             "valtype_cd string, sourcesystem_cd string",

@@ -21,6 +21,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from tmdataloader_spark.audit import AuditLog
+from tmdataloader_spark.session import local_frame
 
 #: DataProcessorFactory.groovy:5-24 (SerialHDD/ACGH/SNP/GWASPlink
 #: types are recognized for routing; unimplemented ones are recorded
@@ -72,7 +73,8 @@ class StudyLoadResult:
         return all(s[2] in ("DONE", "SKIPPED") for s in self.manifest)
 
     def manifest_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(self.study_name, *m) for m in self.manifest],
             "study string, data_type string, dir string, status string, error string",
         )

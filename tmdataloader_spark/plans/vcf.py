@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tmdataloader_spark.operators.dedup import LoadValidationError
 from tmdataloader_spark.plans.hdd import build_hdd_nodes, build_sample_mapping
+from tmdataloader_spark.session import local_frame
 from tmdataloader_spark.sources.gpl import GplPlatform
 from tmdataloader_spark.sources.tsv import read_head_meta, read_tsv
 from tmdataloader_spark.sources.vcf import (
@@ -166,7 +167,8 @@ def load_vcf_study(
             dataset_id=dataset_id,
             source_cd=source_cd,
             header=header,
-            variant_dataset=spark.createDataFrame(
+            variant_dataset=local_frame(
+                spark,
                 [(dataset_id, "tMDataLoader", "hg19", etl_date)],
                 "dataset_id string, etl_id string, genome string, etl_date string",
             ),
@@ -178,7 +180,8 @@ def load_vcf_study(
         )
         datasets.append(ds)
 
-    mapping_df = spark.createDataFrame(
+    mapping_df = local_frame(
+        spark,
         sample_rows,
         "trial_name string, site_id string, subject_id string, sample_cd string, "
         "platform string, category_cd string, source_cd string",

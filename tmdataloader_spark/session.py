@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_driver_memory() -> str:
@@ -72,6 +72,36 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A driver-side frame of ``rows`` (tuples in ``ddl`` column order)
+    built in the JVM.
+
+    ``spark.createDataFrame(<list>, ddl)`` parallelizes the rows as a
+    Python RDD, so every action over the frame forks ``pyspark.daemon``
+    workers to scan it.  Here the rows become a ``pyarrow.Table`` typed
+    by ``StructType.fromDDL(ddl)``, which Spark turns into a
+    ``LocalRelation`` (planned as ``LocalTableScan``): no Python worker
+    runs, and Catalyst's ``PropagateEmptyRelation`` drops an empty one
+    from a union.  Schema (names, types, nullability) and rows equal
+    those of ``spark.createDataFrame(rows, ddl)``.
+
+    For the loader's control rows (empty landing tables, registry and
+    tree-node rows, audit rows); the table is sent through the driver,
+    so keep it small.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):

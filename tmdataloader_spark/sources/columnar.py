@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tmdataloader_spark.session import local_frame
+
 #: numeric widening lattice — a type may be cast UP this chain only
 _NUMERIC_ORDER = [
     T.ByteType(),
@@ -147,6 +149,8 @@ def schema_drift(old: DataFrame, new: DataFrame) -> DataFrame:
             rows.append((c, "retyped", o[c], n[c]))
         else:
             rows.append((c, "unchanged", o[c], n[c]))
-    return old.sparkSession.createDataFrame(
-        rows, "column string, status string, old_type string, new_type string"
+    return local_frame(
+        old.sparkSession,
+        rows,
+        "column string, status string, old_type string, new_type string",
     )

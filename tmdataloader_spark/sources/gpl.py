@@ -14,6 +14,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from tmdataloader_spark.session import local_frame
+
 from tmdataloader_spark.sources.tsv import read_head_meta, read_tsv
 
 ENTREZ_RE = re.compile(r"^(ENTREZ[\s_]*)*GENE([\s_]*ID)*$", re.I)
@@ -118,7 +120,8 @@ def read_gpl(
 def gpl_info_frame(spark, platforms: list[GplPlatform]):
     """de_gpl_info dimension rows (SURVEY.md §1.1 'Platform
     annotation'): one row per loaded platform."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(p.platform, p.title, p.organism, p.marker_type) for p in platforms],
         "platform string, title string, organism string, marker_type string",
     )
@@ -155,7 +158,8 @@ def add_platform(
     (bio_experiment, tree nodes) behaves in this engine.  One-row
     literal frame; the anti-join against the platform-keyed dimension
     broadcasts."""
-    incoming = spark.createDataFrame(
+    incoming = local_frame(
+        spark,
         [(platform, title, organism, marker_type, genome_build, release_nbr)],
         "platform string, title string, organism string, "
         "marker_type string, genome_build string, release_nbr string",

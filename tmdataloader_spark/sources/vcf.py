@@ -25,6 +25,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from tmdataloader_spark.session import local_frame
+
 #: FILES/VcfFile.groovy:129 — allele1, separator, allele2 (haploid: no sep/allele2)
 GT_PATTERN = r"(\d+|\.)(?:([/|])(\d+|\.))?"
 
@@ -222,8 +224,10 @@ def population_info(header: VcfHeader, dataset_id: str, spark: SparkSession) -> 
         )
         for f in header.info_fields
     ]
-    return spark.createDataFrame(
-        rows, "dataset_id string, info_name string, description string, type string, number string"
+    return local_frame(
+        spark,
+        rows,
+        "dataset_id string, info_name string, description string, type string, number string",
     )
 
 
@@ -236,7 +240,8 @@ def population_data(
     in the reference) and bare flags read as 1
     (VCFDataProcessor.groovy:168-198)."""
     spark = entries.sparkSession
-    types = spark.createDataFrame(
+    types = local_frame(
+        spark,
         [(f["id"], f.get("type")) for f in header.info_fields if f.get("id")],
         "info_name string, _type string",
     )
@@ -292,7 +297,8 @@ def population_data(
 def subject_index(header: VcfHeader, dataset_id: str, spark: SparkSession) -> DataFrame:
     """de_variant_subject_idx: sample order in the VCF header
     (VCFDataProcessor.groovy:139-147)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(dataset_id, s, i + 1) for i, s in enumerate(header.samples)],
         "dataset_id string, subject_id string, position int",
     )
