@@ -548,6 +548,7 @@ def test_serial_ldd_timestamp_append_merge(spark, tmp_path):
         top,
     )
     merged = merge_clinical_load(base, inc, MergeMode.APPEND, "GSE0SLDDWTS", top)
+    assert inc.trial_id == merged.trial_id == "GSE0SLDDWTS"
     assert _series_meta(merged, tp + "1 hour\\") == ("60", "minutes", "Y")
     assert _series_meta(merged, tp + "2 hours\\") == ("120", "minutes", "Y")
     # pre-existing nodes keep their XML through the merge union

@@ -28,7 +28,7 @@ import argparse
 import os
 import sys
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from tmdataloader_spark.operators.dedup import LoadValidationError
 from tmdataloader_spark.plans.operations import (
@@ -151,19 +151,19 @@ def _union(base: DataFrame | None, add: DataFrame | None) -> DataFrame | None:
 
 
 def _study_trials(loaded) -> list[str]:
-    """Distinct trial ids a StudyLoadResult landed (first fact row's
-    sourcesystem_cd per data type, order-preserving)."""
+    """Distinct trial ids a StudyLoadResult landed, one per data type
+    that wrote facts, in load order, with no Spark job. Only the
+    clinical and HDD loaders write facts, and each result carries the
+    id its loader resolved (``trial_id``, the sourcesystem_cd of every
+    fact row): the clinical one is the study id ``load_clinical`` was
+    given (the study directory's suffix, else the clinical data's
+    STUDY_ID), the HDD one the mapping file's STUDY_ID, upper-cased."""
     seen: set[str] = set()
     out: list[str] = []
     for res in loaded.results.values():
         if getattr(res, "observation_fact", None) is None:
             continue
-        row = (
-            res.observation_fact.filter(F.col("sourcesystem_cd").isNotNull())
-            .select("sourcesystem_cd")
-            .first()
-        )
-        trial = row[0] if row else None
+        trial = res.trial_id
         if trial and trial not in seen:
             seen.add(trial)
             out.append(trial)

@@ -27,7 +27,7 @@ from tmdataloader_spark.operators.dedup import LoadValidationError
 from tmdataloader_spark.plans.hdd import (
     build_hdd_nodes,
     build_sample_mapping,
-    read_subject_sample_mapping,
+    read_sample_mapping,
     validate_sample_mapping,
 )
 from tmdataloader_spark.sources.gpl import GplPlatform
@@ -202,13 +202,14 @@ def load_acgh(
     mapping_files = [f for f in entries if _MAPPING_RE.match(f)]
     if not mapping_files:
         raise LoadValidationError(f"no subject-sample mapping file in {data_dir}")
-    mapping = read_subject_sample_mapping(
+    checked = read_sample_mapping(
         spark, os.path.join(data_dir, mapping_files[0]), trial_id
     )
+    mapping = checked.frame
     if trial_id is None:
-        trial_id = mapping.select("trial_name").first()[0]
-    validate_sample_mapping(mapping)
-    platforms = [r[0] for r in mapping.select("platform").distinct().collect()]
+        trial_id = checked.trial_id
+    validate_sample_mapping(checked)
+    platforms = checked.platforms
     platform_file = next(
         (
             f

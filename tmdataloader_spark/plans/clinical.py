@@ -12,6 +12,7 @@ Stage map (sql/postgres/procedures/I2B2_LOAD_CLINICAL_DATA.sql):
  7. ontology: fill-in-tree T1, nodes (:949-1074)
  8. fact assembly J1 (:1313-1418)
  9. tree: visual attrs A6 (:1432-1481), concept counts T3 (:1511)
+10. security facts and i2b2_secure (:1526-1527)
 
 Scale notes: the fact side is the only big frame; every dimension
 (trial nodes, patients-per-study, concept groups) is orders of
@@ -19,14 +20,25 @@ magnitude smaller and joins broadcast. The single wide shuffle left is
 the type-inference groupBy — keyed by concept group, which is the
 natural partitioning for all later per-concept work.
 
-The work frame is a working table that holds its data, like the
-reference's ``wrk_clinical_data``: ``localCheckpoint`` materializes it
-once after dedup (stages 1-4, read by the abort guards) and once more
-with each row's leaf path stored (stage 5a), so every later plan starts
-from a one-line scan. The reason is plan text, not compute: Spark
-renders a plan's text on every action and adaptive re-plan, and a
-cached frame prints its whole melt+cleanse plan, with the nested
-leaf-path ``CASE WHEN`` expressions, in every consumer.
+Each intermediate that several actions read is computed once and held
+as a working table, like the reference's ``wrk_clinical_data`` and
+``wt_trial_nodes``. ``localCheckpoint`` materializes four of them:
+
+- the work frame after dedup (stages 1-4), read by the abort guards;
+- the work frame with each row's leaf path stored (stage 5a), read by
+  the trial nodes, the patients and the facts;
+- the finished node table, visual attributes included (stages 7-9a),
+  read by the concept dimension, the fact join, ``i2b2`` and
+  ``i2b2_secure``;
+- the facts before the security rows (stage 8), read by the concept
+  counts, the security facts and the ``observation_fact`` write.
+
+Every later plan starts from a one-line scan. Two costs are avoided.
+Spark renders a plan's text on every action and adaptive re-plan, and
+a cached frame prints its whole melt+cleanse plan, with the nested
+leaf-path ``CASE WHEN`` expressions, in every consumer. And AQE reuses
+an exchange only inside one query, so without the last two checkpoints
+each table write rebuilt the clinical tree from the work frame.
 """
 
 from __future__ import annotations
@@ -73,6 +85,8 @@ class ClinicalLoadResult:
     concept_dimension: DataFrame
     concept_counts: DataFrame
     trial_nodes: DataFrame
+    #: the trial id every fact carries as sourcesystem_cd
+    trial_id: str
     work: DataFrame = None
     audit: list = field(default_factory=list)
     #: i2b2 + secure_obj_token (i2b2_load_security_data's i2b2_secure)
@@ -382,6 +396,20 @@ def load_clinical(
             ).alias("c_metadataxml"),
         )
     )
+    # Stage 9a: visual attributes over the study subtree, applied where
+    # the nodes are built; the finished node table is materialized
+    # once for the concept dimension, the fact join, i2b2 and
+    # i2b2_secure (Scale notes)
+    i2b2 = (
+        visual_attributes(
+            i2b2.withColumnRenamed("c_fullname", "path"),
+            "path",
+            study_root_path=top_node,
+            highlight=highlight_study,
+        )
+        .withColumnRenamed("path", "c_fullname")
+        .localCheckpoint()
+    )
     concept_dim = i2b2.select(
         F.col("c_fullname").alias("concept_path"),
         F.col("c_basecode").alias("concept_cd"),
@@ -427,18 +455,14 @@ def load_clinical(
             F.col("sample_cd"),
             F.col("leaf_node").alias("concept_path"),
         )
+        # read by the counts, the security facts and the fact write
+        .localCheckpoint()
     )
 
-    # Stage 9: counts + visual attributes over the study subtree
+    # Stage 9b: concept counts over the study subtree
     counts = concept_counts(
         facts.select(F.col("concept_path").alias("path"), "patient_num")
     )
-    i2b2 = visual_attributes(
-        i2b2.withColumnRenamed("c_fullname", "path"),
-        "path",
-        study_root_path=top_node,
-        highlight=highlight_study,
-    ).withColumnRenamed("path", "c_fullname")
 
     # Stage 10: security — the reference's load tail
     # (I2B2_LOAD_CLINICAL_DATA.sql:1526-1527): one SECURITY fact per
@@ -459,4 +483,5 @@ def load_clinical(
         trial_nodes=trial_nodes,
         work=work,
         i2b2_secure=i2b2_secure,
+        trial_id=trial_id,
     )

@@ -56,23 +56,36 @@ class HDDLoadResult:
     i2b2: DataFrame  # ontology nodes incl. filled-in folders
     patient_dimension: DataFrame
     platform: GplPlatform
+    #: the mapping's study id, the sourcesystem_cd of the sample facts
+    trial_id: str
     observation_fact: DataFrame | None = None  # per-sample facts
 
 
-def validate_sample_mapping(mapping: DataFrame, gpl_info: DataFrame | None = None,
+class SampleMapping(NamedTuple):
+    """A subject-sample mapping that passed the mapping-file aborts, with
+    what the one aggregate job over it found."""
+
+    frame: DataFrame
+    trial_id: str  # its one study id, upper-cased
+    platforms: list  # its distinct platforms, sorted
+    multi_platform: bool  # some sample is mapped to two or more platforms
+
+
+def validate_sample_mapping(mapping: SampleMapping, gpl_info: DataFrame | None = None,
                             marker_type: str | None = None) -> None:
     """The I2B2_LOAD_SAMPLES abort gates (:94-193): a sample mapped to
     more than one platform aborts (different source_cd required), and
     every platform must already exist in de_gpl_info with the right
-    marker type."""
-    multi = (
-        mapping.groupBy("sample_cd")
-        .agg(F.countDistinct("platform").alias("n"))
-        .filter(F.col("n") > 1)
-        .limit(1)
-        .collect()
-    )
-    if multi:
+    marker type. The per-sample job that names the offending sample
+    runs only when the mapping's aggregate found one."""
+    if mapping.multi_platform:
+        multi = (
+            mapping.frame.groupBy("sample_cd")
+            .agg(F.countDistinct("platform").alias("n"))
+            .filter(F.col("n") > 1)
+            .limit(1)
+            .collect()
+        )
         raise LoadValidationError(
             f"Multiple platforms for single sample {multi[0]['sample_cd']}"
         )
@@ -80,7 +93,7 @@ def validate_sample_mapping(mapping: DataFrame, gpl_info: DataFrame | None = Non
         cond = F.upper(gpl_info["marker_type"]) == marker_type.upper() if marker_type else F.lit(True)
         known = gpl_info.filter(cond).select("platform").distinct()
         missing = (
-            mapping.select("platform")
+            mapping.frame.select("platform")
             .distinct()
             .join(known, on="platform", how="left_anti")
             .limit(1)
@@ -127,12 +140,14 @@ def sample_facts(samples: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def read_subject_sample_mapping(
+def read_sample_mapping(
     spark: SparkSession, path: str | os.PathLike, trial_id: str | None = None
-) -> DataFrame:
+) -> SampleMapping:
     """S-mapping file → landing frame (ExpressionDataProcessor
     .groovy:98-156): mandatory subject/sample/platform/category,
-    TISSUETYPE defaulting, study id uppercased."""
+    TISSUETYPE defaulting, study id uppercased. The mapping-file
+    aborts, the study id, the platforms and the multi-platform test
+    are all answered by one aggregate job."""
     df = read_tsv(spark, path, header=True, comment="#")
     cols = {c.strip().upper().replace(" ", "_"): c for c in df.columns}
 
@@ -164,22 +179,36 @@ def read_subject_sample_mapping(
             F.lit("STD"),
         ).alias("source_cd"),
     )
-    bad = out.filter(
+    blank = (
         (F.coalesce(F.col("subject_id"), F.lit("")) == "")
         | (F.coalesce(F.col("sample_cd"), F.lit("")) == "")
         | (F.coalesce(F.col("platform"), F.lit("")) == "")
         | (F.coalesce(F.col("category_cd"), F.lit("")) == "")
     )
-    if bad.limit(1).count() > 0:
+    summary = out.agg(
+        F.bool_or(blank).alias("blank"),
+        # a struct keeps a null study in the set: it counts as a study
+        F.slice(F.sort_array(F.collect_set(F.struct("trial_name"))), 1, 2).alias(
+            "studies"
+        ),
+        F.sort_array(F.collect_set("platform")).alias("platforms"),
+        # with no blank sample or platform, more (sample, platform)
+        # pairs than samples means a sample has two platforms
+        F.count_distinct("sample_cd", "platform").alias("pairs"),
+        F.count_distinct("sample_cd").alias("samples"),
+    ).first()
+    if summary["blank"]:
         raise LoadValidationError("Incorrect mapping file: mandatory columns not defined")
-    studies = [r[0] for r in out.select("trial_name").distinct().limit(2).collect()]
+    studies = [s["trial_name"] for s in summary["studies"]]
     if len(studies) != 1:
         raise LoadValidationError(f"Multiple studies in one mapping file: {studies}")
     if trial_id is not None and studies[0] != trial_id.upper():
         raise LoadValidationError(
             f"Study ID {studies[0]} doesn't match expected {trial_id}"
         )
-    return out
+    return SampleMapping(
+        out, studies[0], summary["platforms"], summary["pairs"] > summary["samples"]
+    )
 
 
 def build_hdd_nodes(
@@ -504,11 +533,12 @@ def load_hdd(
     ]
     if not mapping_files:
         raise LoadValidationError(f"no subject-sample mapping file in {data_dir}")
-    mapping = read_subject_sample_mapping(spark, mapping_files[0], trial_id)
+    checked = read_sample_mapping(spark, mapping_files[0], trial_id)
+    mapping = checked.frame
     if trial_id is None:  # the mapping file's own STUDY_ID governs
-        trial_id = mapping.select("trial_name").first()[0]
+        trial_id = checked.trial_id
 
-    platforms = [r[0] for r in mapping.select("platform").distinct().collect()]
+    platforms = checked.platforms
     platform_path = os.path.join(data_dir, f"{platforms[0]}.txt")
     if ot.name == "expression":
         platform = read_gpl(
@@ -572,7 +602,7 @@ def load_hdd(
             wide, probe_col=id_col, trial=trial_id.upper(), sample_cols=sample_cols
         )
 
-    validate_sample_mapping(mapping)
+    validate_sample_mapping(checked)
     samples = build_sample_mapping(mapping, top_node, platform)
     nodes = build_hdd_nodes(mapping, top_node, platform.title)
     patients = upsert_sample_patients(samples, None)
@@ -618,6 +648,7 @@ def load_hdd(
         patient_dimension=patients,
         platform=platform,
         observation_fact=sample_facts(samples),
+        trial_id=checked.trial_id,
     )
 
 
@@ -676,7 +707,7 @@ def load_serial_hdd(
         use_first_gene_id=use_first_gene_id, use_t=use_t,
     )
     if trial_id is None:
-        trial_id = result.sample_mapping.select("trial_name").first()[0]
+        trial_id = result.trial_id
     dim_files = [
         os.path.join(str(data_dir), f)
         for f in sorted(os.listdir(str(data_dir)))

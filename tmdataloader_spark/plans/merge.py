@@ -445,6 +445,7 @@ def merge_clinical_load(
         i2b2_secure=load_security_data(i2b2, merged_facts),
         trial_nodes=incoming.trial_nodes,
         work=incoming.work,
+        trial_id=incoming.trial_id,
     )
 
 

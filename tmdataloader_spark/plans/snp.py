@@ -24,7 +24,7 @@ from tmdataloader_spark.operators.zscore import zscore
 from tmdataloader_spark.plans.hdd import (
     build_hdd_nodes,
     build_sample_mapping,
-    read_subject_sample_mapping,
+    read_sample_mapping,
     validate_sample_mapping,
 )
 from tmdataloader_spark.sources.gpl import read_gpl
@@ -113,12 +113,13 @@ def load_snp(
     if not mapping_files:
         raise LoadValidationError(f"no subject-sample mapping file in {data_dir}")
     mapping_path = os.path.join(data_dir, mapping_files[0])
-    mapping = read_subject_sample_mapping(spark, mapping_path, trial_id)
+    checked = read_sample_mapping(spark, mapping_path, trial_id)
+    mapping = checked.frame
     if trial_id is None:  # the mapping file's own STUDY_ID governs
-        trial_id = mapping.select("trial_name").first()[0]
-    validate_sample_mapping(mapping)
+        trial_id = checked.trial_id
+    validate_sample_mapping(checked)
 
-    platforms = [r[0] for r in mapping.select("platform").distinct().collect()]
+    platforms = checked.platforms
     platform = read_gpl(
         spark, os.path.join(data_dir, f"{platforms[0]}.txt"), platforms[0],
         marker_type="SNP", use_first_gene_id=use_first_gene_id,

@@ -36,7 +36,7 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from tmdataloader_spark.sources.tsv import data_file_columns, read_tsv
+from tmdataloader_spark.sources.tsv import read_tsv
 
 SPECIAL_LABELS = {"STUDY_ID", "SITE_ID", "SUBJ_ID", "VISIT_NAME", "SAMPLE_ID"}
 
@@ -366,9 +366,6 @@ def melt_clinical_file(
     )
     df = read_tsv(spark, data_path, header=True, comment="# ")
     cols = df.columns
-    header = data_file_columns(data_path, comment="#")
-    if len(header) != len(cols):
-        header = cols
 
     def by_idx(i: int) -> Column:
         # 1-based mapping index → column; index 0 = empty string

@@ -44,11 +44,41 @@ def read_tsv(
         .option("mode", "PERMISSIVE")
         .option("encoding", "UTF-8")
     )
+    many = isinstance(path, (list, tuple))
+    if schema is None and header and not many and os.path.isfile(path):
+        # one local file: read its header here instead of in a Spark job
+        schema = _header_schema(spark, path, comment[:1])
     if schema is not None:
         reader = reader.schema(schema)
-    if isinstance(path, (list, tuple)):
-        return reader.csv([str(p) for p in path])
-    return reader.csv(str(path))
+    return reader.csv([str(p) for p in path] if many else str(path))
+
+
+def _header_schema(spark: SparkSession, path: str | os.PathLike, comment: str):
+    """The all-string schema ``spark.read.csv(header=True)`` would infer
+    for one file, built from the header row read on the driver, so the
+    read launches no header-scan job. Spark's safe-header rules apply
+    (``CSVDataSource.makeSafeHeader``): an empty cell becomes
+    ``_c<i>``, and a name repeated in the header (case-insensitively,
+    unless ``spark.sql.caseSensitive``) becomes ``<name><i>``. Returns
+    None for a file without a header row."""
+    from collections import Counter
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    names = data_file_columns(path, comment)
+    if not names:
+        return None
+    # Spark parses boolean confs case-insensitively ("TRUE", " True")
+    case_sensitive = (
+        spark.conf.get("spark.sql.caseSensitive", "false").strip().lower() == "true"
+    )
+    keys = [n if case_sensitive else n.lower() for n in names]
+    repeated = {k for k, n in Counter(keys).items() if n > 1}
+    safe = [
+        f"_c{i}" if not n else f"{n}{i}" if k in repeated else n
+        for i, (n, k) in enumerate(zip(names, keys))
+    ]
+    return StructType([StructField(n, StringType()) for n in safe])
 
 
 _META_RE = re.compile(r"^#\s*([A-Za-z0-9_]+)\s*:\s*(.*?)\s*$")
@@ -72,14 +102,17 @@ def read_head_meta(path: str | os.PathLike) -> dict[str, str]:
 
 
 def data_file_columns(path: str | os.PathLike, comment: str = "#") -> list[str]:
-    """Driver-side peek at a TSV header row (skipping comments) — used
-    by the mapping compiler to resolve 1-based column indexes
-    (CsvLikeFile.header)."""
+    """Driver-side peek at a TSV header row, the raw cells as written
+    (CsvLikeFile.header): the first line that is neither blank nor a
+    comment, which is the line Spark takes as the header. ``read_tsv``
+    builds its schema from it."""
     import csv
 
-    with io.open(path, "r", encoding="utf-8", errors="replace") as fh:
+    # utf-8-sig: Hadoop's line reader drops a leading byte-order mark
+    with io.open(path, "r", encoding="utf-8-sig", errors="replace") as fh:
         for line in fh:
-            if line.startswith(comment) or not line.strip():
+            # Spark's SQL trim: a line of tabs is a header, not a blank
+            if line.startswith(comment) or not line.strip(" \n"):
                 continue
             return next(csv.reader([line], delimiter="\t"))
     return []
