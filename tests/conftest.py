@@ -1,11 +1,33 @@
+import glob
+import importlib.util
 import os
 
 import pytest
 
 from tmdataloader_spark.session import get_spark
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
-FIXTURES = "/root/reference/fixtures"
+
+#: tMDataLoader's own fixture tree (FIXTURES.md). It is not part of this
+#: repository; a test whose assertions are literals of that data skips
+#: where the tree is absent.
+REFERENCE_FIXTURES = "/root/reference/fixtures"
+REFERENCE_GSE0 = os.path.join(REFERENCE_FIXTURES, "Test Studies", "Test Study_GSE0")
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_FIXTURES), reason=f"{REFERENCE_FIXTURES} not found"
+)
+
+
+def load_gen_study():
+    """``perfbench/gen_study.py``, imported by path (``perfbench`` is no
+    package)."""
+    spec = importlib.util.spec_from_file_location(
+        "gen_study", os.path.join(ROOT, "perfbench", "gen_study.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 @pytest.fixture(scope="session")
@@ -25,6 +47,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def gse0_study(tmp_path_factory):
+    """A ``Test Study_GSE0`` directory: the reference's own where it is
+    present, else one written by ``gen_study`` with the same study id
+    and display name (clinical plus expression data, FIXTURES.md
+    sections 1-5). Tests that take it assert only what holds for any
+    study of that shape."""
+    if os.path.isdir(REFERENCE_GSE0):
+        return REFERENCE_GSE0
+    study = load_gen_study().write_study(
+        str(tmp_path_factory.mktemp("gse0")), seed=1, n_subjects=10, n_probes=50,
+        study_id="GSE0", name="Test Study",
+    )
+    return os.path.join(study["data_dir"], "Test Study_GSE0")
+
+
+@pytest.fixture(scope="session")
+def gse0_mapping(gse0_study):
+    """The clinical mapping file of ``gse0_study``."""
+    (path,) = glob.glob(
+        os.path.join(glob.escape(gse0_study), "ClinicalDataToUpload", "*_Mapping_File.txt")
+    )
+    return path
 
 
 @pytest.fixture(autouse=True)

@@ -4,18 +4,18 @@ parquet warehouse, then run the move / delete operations on it."""
 import os
 import shutil
 
+from conftest import needs_reference
+
 from tmdataloader_spark.cli import main
 
-FIXTURE = "/root/reference/fixtures/Test Studies/Test Study_GSE0"
 
-
-def test_cli_upload_move_delete(spark, tmp_path):
+def test_cli_upload_move_delete(spark, tmp_path, gse0_study):
     # clinical-only copy keeps the e2e fast; full multi-type loads are
     # covered by test_study.py
     study = tmp_path / "studies" / "Test Study_GSE0"
     study.parent.mkdir()
     shutil.copytree(
-        os.path.join(FIXTURE, "ClinicalDataToUpload"),
+        os.path.join(gse0_study, "ClinicalDataToUpload"),
         study / "ClinicalDataToUpload",
     )
     wh = str(tmp_path / "wh")
@@ -44,7 +44,7 @@ def test_cli_version(capsys):
     assert "tm_etl" in capsys.readouterr().out
 
 
-def test_cli_upload_multi_type_keeps_all_ptypes(spark, tmp_path):
+def test_cli_upload_multi_type_keeps_all_ptypes(spark, tmp_path, gse0_study):
     """A study shipping several data types (Expression + Clinical — the
     standard layout) keeps EVERY type's frames after upload: the
     replace-drop runs once per trial BEFORE any type merges, so the
@@ -53,7 +53,7 @@ def test_cli_upload_multi_type_keeps_all_ptypes(spark, tmp_path):
     study = tmp_path / "studies" / "Test Study_GSE0"
     study.parent.mkdir()
     for sub in ("ClinicalDataToUpload", "ExpressionDataToUpload"):
-        shutil.copytree(os.path.join(FIXTURE, sub), study / sub)
+        shutil.copytree(os.path.join(gse0_study, sub), study / sub)
     wh = str(tmp_path / "wh")
 
     rc = main([str(tmp_path / "studies"), "--warehouse", wh,
@@ -115,6 +115,7 @@ DUP_FIXTURE = (
 )
 
 
+@needs_reference
 def test_cli_check_duplicates_writes_csv(tmp_path):
     """--check-duplicates (ClinicalDataProcessor.groovy:302-330): the
     duplicated-patient study still FAILS the upload (the abort is
@@ -160,12 +161,12 @@ def test_cli_check_duplicates_writes_csv(tmp_path):
     assert not (study2 / "ClinicalDataToUpload" / "duplicates.csv").exists()
 
 
-def _copy_study_as(dst_dir, new_study_id=None):
-    """Copy the GSE0 clinical fixture, optionally rewriting the study
-    id inside the mapping/data files (dir name carries the display
-    name + id)."""
+def _copy_study_as(src, dst_dir, new_study_id=None):
+    """Copy the clinical data of the GSE0 study ``src``, optionally
+    rewriting the study id inside the mapping/data files and in the
+    file names (dir name carries the display name + id)."""
     shutil.copytree(
-        os.path.join(FIXTURE, "ClinicalDataToUpload"),
+        os.path.join(src, "ClinicalDataToUpload"),
         dst_dir / "ClinicalDataToUpload",
     )
     if new_study_id:
@@ -174,16 +175,18 @@ def _copy_study_as(dst_dir, new_study_id=None):
             p = d / f
             if p.is_file() and f.endswith(".txt"):
                 p.write_text(p.read_text().replace("GSE0", new_study_id))
+            if "GSE0" in f:
+                p.rename(d / f.replace("GSE0", new_study_id))
 
 
-def test_cli_replace_study_guard_and_flag(spark, tmp_path):
+def test_cli_replace_study_guard_and_flag(spark, tmp_path, gse0_study):
     """AbstractDataProcessor.groovy:80-116 e2e: re-uploading the SAME
     path with a DIFFERENT study id fails the study (reference message)
     and leaves the warehouse untouched; --replace-study instead
     removes the old study and lands the new one."""
     studies1 = tmp_path / "s1" / "Test Study_GSE0"
     studies1.parent.mkdir()
-    _copy_study_as(studies1)
+    _copy_study_as(gse0_study, studies1)
     wh = str(tmp_path / "wh")
     assert main([str(tmp_path / "s1"), "--warehouse", wh,
                  "--parent-node", "\\Test Studies", "--force-start"]) == 0
@@ -191,7 +194,7 @@ def test_cli_replace_study_guard_and_flag(spark, tmp_path):
     # same display name ('Test Study' -> same node), new id GSE1
     studies2 = tmp_path / "s2" / "Test Study_GSE1"
     studies2.parent.mkdir()
-    _copy_study_as(studies2, new_study_id="GSE1")
+    _copy_study_as(gse0_study, studies2, new_study_id="GSE1")
 
     rc = main([str(tmp_path / "s2"), "--warehouse", wh,
                "--parent-node", "\\Test Studies", "--force-start"])
@@ -209,7 +212,7 @@ def test_cli_replace_study_guard_and_flag(spark, tmp_path):
     assert facts.filter(facts.sourcesystem_cd == "GSE1").count() > 0
 
 
-def test_cli_secure_study_registers_and_copies_security(spark, tmp_path):
+def test_cli_secure_study_registers_and_copies_security(spark, tmp_path, gse0_study):
     """--secure-study registers the study in searchapp
     (i2b2_create_security_for_trial.sql:130-173: bio_experiment stub +
     search_secure_object row), --copy-security-settings-from copies
@@ -218,7 +221,7 @@ def test_cli_secure_study_registers_and_copies_security(spark, tmp_path):
     and a PUBLIC re-upload deregisters (:181-186)."""
     studies = tmp_path / "s" / "Test Study_GSE0"
     studies.parent.mkdir()
-    _copy_study_as(studies)
+    _copy_study_as(gse0_study, studies)
     wh = str(tmp_path / "wh")
     assert main([str(tmp_path / "s"), "--warehouse", wh,
                  "--parent-node", "\\Test Studies", "--force-start",
@@ -246,7 +249,7 @@ def test_cli_secure_study_registers_and_copies_security(spark, tmp_path):
     )
     studies2 = tmp_path / "s2" / "Test Study Second_GSE2"
     studies2.parent.mkdir()
-    _copy_study_as(studies2, new_study_id="GSE2")
+    _copy_study_as(gse0_study, studies2, new_study_id="GSE2")
     assert main([str(tmp_path / "s2"), "--warehouse", wh,
                  "--parent-node", "\\Test Studies", "--force-start",
                  "--secure-study", "--copy-security-settings-from", "GSE0"]) == 0

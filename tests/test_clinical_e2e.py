@@ -1,5 +1,6 @@
-r"""End-to-end clinical load of the reference fixture study
-`Test Study_GSE0` (SURVEY.md §7 step 2).
+r"""End-to-end clinical load of `Test Study_GSE0` (SURVEY.md §7 step 2):
+the reference fixture study where it is present, else the generated
+stand-in (``gse0_study`` in conftest.py).
 
 The flagship assertion mirrors the reference's own integration test
 (ClinicalDataProcessorTest.groovy:142-146):
@@ -9,24 +10,22 @@ The flagship assertion mirrors the reference's own integration test
 """
 
 import pytest
+from conftest import needs_reference
 from pyspark.sql import functions as F
 
 from tmdataloader_spark.plans.clinical import load_clinical
 from tmdataloader_spark.sources.mapping import melt_clinical_study
 
-MAPPING = (
-    "/root/reference/fixtures/Test Studies/Test Study_GSE0/"
-    "ClinicalDataToUpload/Test Study_GSE0_Mapping_File.txt"
-)
 TOP = "\\Test Studies\\Test Study\\"
 
 
 @pytest.fixture(scope="module")
-def result(spark):
-    landing = melt_clinical_study(spark, MAPPING)
+def result(spark, gse0_mapping):
+    landing = melt_clinical_study(spark, gse0_mapping)
     return load_clinical(spark, landing, "GSE0", TOP)
 
 
+@needs_reference
 def test_flagship_patient_count(result):
     path = TOP + "Biomarker Data\\Mutations\\TST001 (Entrez ID: 1956)\\AA mutation\\"
     rows = result.concept_counts.filter(F.col("concept_path") == path).collect()
@@ -34,6 +33,7 @@ def test_flagship_patient_count(result):
     assert rows[0].patient_count == 9
 
 
+@needs_reference
 def test_patient_dimension(result):
     pd = result.patient_dimension.collect()
     ids = sorted(r.sourcesystem_cd for r in pd)
@@ -47,6 +47,7 @@ def test_patient_dimension(result):
     assert by_id["GSE0:HCC4006"].sex_cd == "Unknown"
 
 
+@needs_reference
 def test_numeric_type_inference(result):
     # Age In Years is all-numeric → 'N' facts with nval_num
     age_facts = (
@@ -62,6 +63,7 @@ def test_numeric_type_inference(result):
     assert all(r.tval_char == "E" and r.nval_num is not None for r in rows)
 
 
+@needs_reference
 def test_text_facts_store_value(result):
     sex_facts = result.observation_fact.filter(
         (F.col("valtype_cd") == "T") & F.col("concept_path").contains("Sex (SEX)")
@@ -69,6 +71,7 @@ def test_text_facts_store_value(result):
     assert {r.tval_char for r in sex_facts} == {"Female", "Male"}
 
 
+@needs_reference
 def test_tree_is_complete_and_counts_monotone(result):
     counts = {r.concept_path: r.patient_count for r in result.concept_counts.collect()}
     # every node's count >= any of its children's counts
@@ -80,6 +83,7 @@ def test_tree_is_complete_and_counts_monotone(result):
     assert counts[TOP] >= 9
 
 
+@needs_reference
 def test_i2b2_visual_attributes(result):
     """Folder/leaf attrs plus the study-root flag:
     ClinicalDataProcessorTest.groovy:145-146 asserts exactly ONE node
@@ -95,12 +99,12 @@ def test_i2b2_visual_attributes(result):
     assert fas == [TOP]  # exactly one study node, the top node
 
 
-def test_highlight_clinical_data_sets_faj(spark):
+def test_highlight_clinical_data_sets_faj(spark, gse0_mapping):
     """The --highlight-clinical-data flag turns the top node's third
     visual-attribute character into 'J' (highlight_study='Y' at
     I2B2_LOAD_CLINICAL_DATA.sql:1460, wired from
     ClinicalDataProcessor.groovy:290)."""
-    landing = melt_clinical_study(spark, MAPPING)
+    landing = melt_clinical_study(spark, gse0_mapping)
     res = load_clinical(
         spark, landing, "GSE0", TOP, highlight_study=True, check_duplicates=False
     )
@@ -109,7 +113,7 @@ def test_highlight_clinical_data_sets_faj(spark):
     assert "FAS" not in set(rows.values())
 
 
-def test_security_facts_and_i2b2_secure(result, spark):
+def test_security_facts_and_i2b2_secure(result, spark, gse0_mapping):
     """The load tail (I2B2_LOAD_CLINICAL_DATA.sql:1526-1527): one
     SECURITY fact per patient — token EXP:PUBLIC by default,
     EXP:<trial> with --secure-study — and i2b2_secure = i2b2 +
@@ -128,7 +132,7 @@ def test_security_facts_and_i2b2_secure(result, spark):
     assert result.i2b2_secure.count() == result.i2b2.count()
 
     secured = load_clinical(
-        spark, melt_clinical_study(spark, MAPPING), "GSE0", TOP,
+        spark, melt_clinical_study(spark, gse0_mapping), "GSE0", TOP,
         secure_study=True, check_duplicates=False,
     )
     sec2 = secured.observation_fact.filter(F.col("concept_cd") == "SECURITY")

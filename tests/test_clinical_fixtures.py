@@ -7,6 +7,7 @@ file negative.
 """
 
 import pytest
+from conftest import needs_reference
 from pyspark.sql import functions as F
 
 from tmdataloader_spark.plans.clinical import load_clinical
@@ -24,6 +25,7 @@ def _counts(spark, dirname, mapname, study_id, study_name):
     }
 
 
+@needs_reference
 def test_terminator_paths(spark):
     """ClinicalDataProcessorTest.groovy:372-399 — `+$` terminates the
     category path: no visit/terminal nodes appear below it."""
@@ -61,6 +63,7 @@ def test_terminator_paths(spark):
         assert absent not in c, f"terminated path grew a child: {absent}"
 
 
+@needs_reference
 def test_data_value_in_path(spark):
     """ClinicalDataProcessorTest.groovy:401-424 — DATALABEL/DATAVALUE
     placeholders inside category_cd place values mid-path."""
@@ -87,6 +90,7 @@ def test_data_value_in_path(spark):
         assert c.get(path) == n, f"{path}: got {c.get(path)}, want {n}"
 
 
+@needs_reference
 def test_tag_substitution(spark):
     """ClinicalDataProcessorTest.groovy:149-167 — $$TAG values from
     the tags file substitute into leaf paths."""
@@ -111,6 +115,7 @@ def test_tag_substitution(spark):
     assert "GSE0TAG:2SKMEL28" in pats
 
 
+@needs_reference
 def test_upper_and_lower_case_values_stay_distinct(spark):
     """ClinicalDataProcessorTest.groovy:743-757 — case-differing
     values produce distinct leaves (no case collapsing)."""
@@ -126,6 +131,7 @@ def test_upper_and_lower_case_values_stay_distinct(spark):
         assert node + v + "\\" in c, f"missing case-distinct leaf {v}"
 
 
+@needs_reference
 def test_repeating_labels_before_terminator(spark):
     """ClinicalDataProcessorTest.groovy:777-795 — visit_name equal to
     data_label with an unlabelled terminator path keeps the reference
@@ -149,6 +155,7 @@ def test_repeating_labels_before_terminator(spark):
         assert c.get(path) == n, f"{path}: got {c.get(path)}, want {n}"
 
 
+@needs_reference
 def test_wrong_mapping_file_name_fails(spark):
     """ClinicalDataProcessorTest.groovy:797-805 — a mapping file that
     doesn't match `*_Mapping_File.txt` fails the clinical job (the
@@ -167,6 +174,7 @@ def test_wrong_mapping_file_name_fails(spark):
     assert "no mapping file" in (clinical[0][3] or "")
 
 
+@needs_reference
 def test_duplicated_patient_id_fails_with_reference_report(spark):
     """ClinicalDataProcessorTest.groovy:455-468 — the duplicated-
     patient study fails the load and the duplicates listing matches
@@ -198,6 +206,7 @@ def test_duplicated_patient_id_fails_with_reference_report(spark):
     assert got == expected
 
 
+@needs_reference
 def test_plus_sign_paths(spark):
     """ClinicalDataProcessorTest.groovy:359-369 — `+` separates path
     components, `(plus)` escapes a literal plus, value pluses become
@@ -220,6 +229,7 @@ def test_plus_sign_paths(spark):
         assert c.get(path) == n, f"{path}: got {c.get(path)}, want {n}"
 
 
+@needs_reference
 def test_long_category_cd_aborts(spark):
     """ClinicalDataProcessorTest.groovy:804-813 — CATEGORY_CD over 250
     chars fails mapping validation with the reference's message."""
@@ -232,6 +242,7 @@ def test_long_category_cd_aborts(spark):
         )
 
 
+@needs_reference
 def test_non_visual_symbols_abort(spark):
     """ClinicalDataProcessorTest.groovy:815-823 (SkipLinesReader) —
     bytes that don't decode as UTF-8 abort the load."""
@@ -242,6 +253,7 @@ def test_non_visual_symbols_abort(spark):
         melt_clinical_study(spark, d + "ERROR-GSE0NOVIS_Mapping_File.txt")
 
 
+@needs_reference
 def test_different_study_id_in_file_aborts(spark):
     """ClinicalDataProcessorTest.groovy:825-833 — a row whose STUDY_ID
     differs from the file's first aborts with the reference's exact
@@ -258,6 +270,7 @@ def test_different_study_id_in_file_aborts(spark):
         )
 
 
+@needs_reference
 def test_different_study_id_two_files_aborts(spark):
     """ClinicalDataProcessorTest.groovy:835-845 — Var.2: the second
     file's STUDY_ID differs (line 2 of TST_DEMO.txt)."""
@@ -271,6 +284,7 @@ def test_different_study_id_two_files_aborts(spark):
         melt_clinical_study(spark, mapping).count()
 
 
+@needs_reference
 def test_non_utf8_study_aborts(spark):
     """ClinicalDataProcessorTest.groovy:759-766 — the Non-UTF8 study's
     data file fails the byte-level validation."""
@@ -281,6 +295,7 @@ def test_non_utf8_study_aborts(spark):
         melt_clinical_study(spark, d + "ERROR-UNF8_Mapping_File.txt")
 
 
+@needs_reference
 def test_non_unique_column_names_load(spark):
     """ClinicalDataProcessorTest.groovy:350-357 — duplicate data-file
     column names load fine WITH the --allow-non-unique-columns flag
@@ -301,6 +316,7 @@ def test_non_unique_column_names_load(spark):
     assert res.observation_fact.count() > 0
 
 
+@needs_reference
 def test_extra_level_top_node_keeps_upper_levels_studyless(spark):
     r"""ClinicalDataProcessorTest.groovy:847-857 — loading under a
     DEEPER top node (\Test Studies\Extra Level\<study>\) must not set
@@ -659,6 +675,7 @@ def _singlevn_counts(spark, always_set):
     }
 
 
+@needs_reference
 def test_single_visit_name_removed_by_default(spark):
     r"""ClinicalDataProcessorTest.groovy:421-438 ('it should remove
     single visit name by default'): a study whose only visit name is
@@ -677,6 +694,7 @@ def test_single_visit_name_removed_by_default(spark):
     assert demo + "\\Language\\French\\Baseline\\" not in counts
 
 
+@needs_reference
 def test_single_visit_name_kept_with_option(spark):
     r"""ClinicalDataProcessorTest.groovy:439-455 ('it should always
     set visit name if option specified'): with alwaysSetVisitName the

@@ -10,6 +10,7 @@ import os
 import sys
 
 import pytest
+from conftest import needs_reference
 
 from pyspark.sql import functions as F
 
@@ -30,6 +31,7 @@ def _node_patients(observation_fact, prefix: str) -> int:
     )
 
 
+@needs_reference
 def test_acgh_data_processor_loads_data(spark):
     """ACGHDataProcessorTest.groovy:31-41 (testItLoadsData): sample
     'TSGA-04-1530' lands in the sample mapping, and the
@@ -48,6 +50,7 @@ def test_acgh_data_processor_loads_data(spark):
     assert all(r.segmented == 0.097 and r.flag == 0 for r in rows)
 
 
+@needs_reference
 def test_rbm_data_processor_loads_data(spark):
     """RBMDataProcessorTest.groovy:63-70 (testItLoadsData): sample
     'GA8015ZS-06' present; patient site 1 subject S57023 in the trial;
@@ -73,6 +76,7 @@ def test_rbm_data_processor_loads_data(spark):
     assert _node_patients(res.observation_fact, node) == 2
 
 
+@needs_reference
 def test_metabolomics_data_processor_loads_data(spark):
     """MetabolomicsDataProcessorTest.groovy:53-68 (testItLoadsData):
     sample '18PP' present; patient 'null:GSM918960' in the trial; the
@@ -119,6 +123,7 @@ def test_metabolomics_data_processor_loads_data(spark):
     assert len(vals) == 1 and abs(vals[0].raw_intensity - 5095) < 0.001
 
 
+@needs_reference
 def test_gwas_plink_data_processor_uploads(spark):
     """GWASPlinkDataProcessorTest.groovy:25-36 ('it should upload GWAS
     Plink data'): a gwas_plink.plink_data record exists for the study,
@@ -139,6 +144,7 @@ def test_gwas_plink_data_processor_uploads(spark):
     assert node_rows.select("patient_id").distinct().count() == 6
 
 
+@needs_reference
 def test_expression_serial_hdd_data_processor_loads_data(spark):
     """ExpressionSerialHDDDataProcessorTest.groovy:61-95
     (testItLoadsData): sample 'A204' present; patient 'A673' in the
@@ -198,6 +204,7 @@ def test_expression_serial_hdd_data_processor_loads_data(spark):
     assert _node_patients(res.observation_fact, wk1) == 2  # see docstring
 
 
+@needs_reference
 def test_non_unique_column_names_gate(spark):
     """ClinicalDataProcessorTest.groovy:351-357 ('it should load study
     with non-unique column names'): the GSE0NQCN study's data files

@@ -1,6 +1,7 @@
 """GWAS PLINK loader + process lock tests."""
 
 import pytest
+from conftest import needs_reference
 
 from tmdataloader_spark.operators.dedup import LoadValidationError
 from tmdataloader_spark.plans.gwas import load_gwas_plink, validate_fam
@@ -13,6 +14,7 @@ FIX = (
 TOP = "\\Test Studies\\Test GWAS Study\\"
 
 
+@needs_reference
 def test_gwas_plink_load(spark):
     from tmdataloader_spark.functions.lzo import decompress
 

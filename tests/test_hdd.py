@@ -1,31 +1,37 @@
-"""Expression (HDD) pipeline e2e on the reference fixture, with a
-pure-pandas z-score oracle (SURVEY.md §5 strategy points 1–2)."""
+"""Expression (HDD) pipeline e2e on the GSE0 study (``gse0_study``),
+with a pure-pandas z-score oracle (SURVEY.md §5 strategy points 1–2)."""
 
+import glob
 import math
+import os
 
 import pandas as pd
 import pytest
+from conftest import needs_reference
 from pyspark.sql import functions as F
 
 from tmdataloader_spark.plans.hdd import load_expression, write_partitioned
 
-DATA_DIR = (
-    "/root/reference/fixtures/Test Studies/Test Study_GSE0/ExpressionDataToUpload"
-)
 TOP = "\\Test Studies\\Test Study\\"
 
 
 @pytest.fixture(scope="module")
-def result(spark):
-    return load_expression(spark, DATA_DIR, "GSE0", TOP)
+def data_dir(gse0_study):
+    return os.path.join(gse0_study, "ExpressionDataToUpload")
 
 
-def _oracle_zscores():
+@pytest.fixture(scope="module")
+def result(spark, data_dir):
+    return load_expression(spark, data_dir, "GSE0", TOP)
+
+
+def _oracle_zscores(data_dir):
     """Pandas twin of the kernel: log2 → per-probe median/stddev →
     clamp ±2.5 (I2B2_PROCESS_MRNA_DATA.sql:318-326)."""
-    wide = pd.read_csv(
-        DATA_DIR + "/Test Study_GSE0_Gene_Expression_Data_R.txt", sep="\t"
+    (matrix,) = glob.glob(
+        os.path.join(glob.escape(data_dir), "*_Gene_Expression_Data_R.txt")
     )
+    wide = pd.read_csv(matrix, sep="\t")
     long = wide.melt(id_vars=wide.columns[0], var_name="sample", value_name="x")
     long = long[pd.to_numeric(long.x, errors="coerce").notna()]
     long["x"] = long.x.astype(float)
@@ -39,6 +45,7 @@ def _oracle_zscores():
     return out, probe_col
 
 
+@needs_reference
 def test_sample_mapping(result):
     sm = result.sample_mapping.toPandas()
     assert sm.trial_name.unique().tolist() == ["GSE0"]
@@ -48,6 +55,7 @@ def test_sample_mapping(result):
     assert sm.concept_path.str.startswith(TOP + "Biomarker Data\\").all()
 
 
+@needs_reference
 def test_nodes(result):
     nodes = {r.c_fullname: r for r in result.i2b2.collect()}
     leaf = TOP + "Biomarker Data\\Test GEX Platform\\Blood\\"
@@ -56,8 +64,8 @@ def test_nodes(result):
     assert nodes[TOP + "Biomarker Data\\"].c_visualattributes == "FA"
 
 
-def test_zscore_values_match_oracle(result):
-    oracle, probe_col = _oracle_zscores()
+def test_zscore_values_match_oracle(result, data_dir):
+    oracle, probe_col = _oracle_zscores(data_dir)
     got = result.data.toPandas()
     assert len(got) == len(oracle)
     sm = result.sample_mapping.toPandas().set_index("sample_cd").assay_id
@@ -96,6 +104,7 @@ def test_gpl_info_join(spark):
     assert out == {"S1": "Title 1", "S2": None}
 
 
+@needs_reference
 def test_reference_expression_assertions(result):
     """ExpressionDataProcessorTest.testItLoadsData parity: known
     sample/subject pairs, per-sample attribute routing into
@@ -127,6 +136,7 @@ def test_reference_expression_assertions(result):
     assert abs(row[0]["raw_intensity"] - 6.624529839) < 1e-9
 
 
+@needs_reference
 def test_merge_samples_reload(spark, result):
     """ExpressionDataProcessorTest.testItMergeSamples parity: the
     additional-studies reload replaces overlapping samples' values,
@@ -182,6 +192,7 @@ def test_merge_samples_reload(spark, result):
     assert len(facts) == len(facts[["sample_cd", "concept_cd"]].drop_duplicates())
 
 
+@needs_reference
 def test_same_samples_different_platforms(spark):
     """ExpressionDataProcessorTest.testItLoadsSameSamplesForDifferentPlatforms:
     the same sample codes loaded on two platforms coexist as distinct
@@ -294,6 +305,7 @@ def test_load_samples_node_templating_mirrors_reference(spark):
     assert f"{top}LDR\\Loader Test Platform\\Unspecified Tissue Type\\" in nodes
 
 
+@needs_reference
 def test_platform_multiple_gene_ids(spark):
     """PlatformLoaderTest.groovy:28-44 (testMultipleGeneIds) on the
     reference's own fixtures/Platforms/TST.txt: with

@@ -4,6 +4,7 @@ REPLACE/UPDATE/UPDATE VARIABLES/APPEND merge mode') — DataFrames only.
 """
 
 import pytest
+from conftest import needs_reference
 
 from pyspark.sql import functions as F
 
@@ -69,6 +70,7 @@ def base(spark):
     return load(spark, BASE)
 
 
+@needs_reference
 def test_replace_mode(spark, base):
     demographic = ROOT + "Subjects\\Demographics\\"
     assert patient_count(base, demographic) == 9
@@ -77,6 +79,7 @@ def test_replace_mode(spark, base):
     assert patient_count(merged, demographic) == 1
 
 
+@needs_reference
 def test_update_mode(spark, base):
     male = ROOT + "Subjects\\Demographics\\Sex (SEX)\\Male\\"
     female = ROOT + "Subjects\\Demographics\\Sex (SEX)\\Female\\"
@@ -104,6 +107,7 @@ def test_update_mode(spark, base):
     assert patient_count(merged, biomarker) == 2
 
 
+@needs_reference
 def test_update_variables_mode(spark, base):
     male = ROOT + "Subjects\\Demographics\\Sex (SEX)\\Male\\"
     female = ROOT + "Subjects\\Demographics\\Sex (SEX)\\Female\\"
@@ -125,6 +129,7 @@ def test_update_variables_mode(spark, base):
     assert patient_count(merged, biomarker) == 3
 
 
+@needs_reference
 def test_update_variables_single_visit_name(spark):
     top = "\\Test Studies\\Test Study With Single Visit Name\\"
     base_mapping = (
@@ -145,6 +150,7 @@ def test_update_variables_single_visit_name(spark):
     assert patient_count(merged, male) == 1
 
 
+@needs_reference
 def test_update_variables_duplicate_path_aborts(spark):
     top = "\\Test Studies\\Test Study With Duplicate Category Path\\"
     study_dir = "Test Study With Duplicate Category Path_GSE0WDCP"
@@ -160,6 +166,7 @@ def test_update_variables_duplicate_path_aborts(spark):
         )
 
 
+@needs_reference
 def test_append_mode(spark, base):
     male = ROOT + "Subjects\\Demographics\\Sex (SEX)\\Male\\"
     female = ROOT + "Subjects\\Demographics\\Sex (SEX)\\Female\\"
@@ -217,6 +224,7 @@ def test_concept_dimension_merge_existing_wins(spark):
         }
 
 
+@needs_reference
 def test_merge_security_facts_delete_then_insert(spark, base):
     """i2b2_create_security_for_trial.sql:62-98 delete-then-insert
     parity: a merge reload DELETEs every SECURITY fact of the trial
@@ -268,6 +276,7 @@ def test_merge_security_facts_delete_then_insert(spark, base):
     assert study_tokens == {"EXP:GSE0"}
 
 
+@needs_reference
 def test_merge_preserves_highlight_flag(spark, base):
     """A merge-mode reload of a --highlight-clinical-data study keeps
     the top node FAJ (highlight_study='Y' routes through

@@ -7,6 +7,7 @@ import math
 
 import pandas as pd
 import pytest
+from conftest import needs_reference
 
 from tmdataloader_spark.plans.hdd import OMICS_TYPES, load_hdd
 
@@ -111,6 +112,7 @@ def _oracle(data_path, probe_idx, first_sample_idx, platform_probes,
 
 
 @pytest.mark.parametrize("omics", list(CASES))
+@needs_reference
 def test_omics_load_matches_oracle(spark, omics):
     data_dir, trial, data_file, probe_idx, first_sample_idx = CASES[omics]
     kind = omics.rstrip("23")
@@ -147,6 +149,7 @@ def test_omics_load_matches_oracle(spark, omics):
         assert len(got[got.probeset_id == "O002311"]) == 5
 
 
+@needs_reference
 def test_rbm_long_format(spark):
     """RBM arrives already-long (sampid/Analyte/avalue columns —
     RBMDataProcessor.groovy:185-205)."""
@@ -164,6 +167,7 @@ def test_rbm_long_format(spark):
     assert pdf.zscore.between(-2.5, 2.5).all()
 
 
+@needs_reference
 def test_serial_hdd_series_meta(spark):
     """X11: SeriesMeta c_metadataxml lands on the matching ontology
     nodes (I2B2_PROCESS_SERIAL_HDD_DATA.sql:62-74)."""
@@ -187,6 +191,7 @@ def test_serial_hdd_series_meta(spark):
 
 
 @pytest.mark.parametrize("omics", ["protein", "metabolomics"])
+@needs_reference
 def test_omics_nodes_and_samples(spark, omics):
     data_dir, trial, *_ = CASES[omics]
     res = load_hdd(spark, data_dir, trial, TOP, omics)
@@ -238,6 +243,7 @@ def test_quantile_normalize_unequal_depth_and_prune(spark):
     assert {r.rnk for r in pruned} == {1} and len(pruned) == 2
 
 
+@needs_reference
 def test_mirna_seq_reference_numbers(spark):
     """MIRNASeqDataProcessorTest.groovy:64-69 pins exact warehouse
     numbers for sample GSM918944 probe '16': raw 0.163313108,
@@ -268,6 +274,7 @@ def test_mirna_seq_reference_numbers(spark):
     assert abs(r.zscore - 1.05828) < 5e-6
 
 
+@needs_reference
 def test_mirna_qpcr_reference_numbers(spark):
     """MIRNAQpcrDataProcessorTest.groovy:49-68 pins the dCt semantics:
     sample GSM918938 (subject S57023) probe '1' lands with raw
@@ -306,6 +313,7 @@ def _copy_seq_fixture(tmp_path, data_edit=None, rename_to=None):
     return str(dst)
 
 
+@needs_reference
 def test_mirna_negative_r_rows_dropped_before_collapse(spark, tmp_path):
     """I2B2_PROCESS_QPCR_MIRNA_DATA.sql:1002 drops sign(intensity)=-1
     rows for a dataType-R file (both MIRNA_QPCR and MIRNA_SEQ) BEFORE
@@ -351,6 +359,7 @@ def test_mirna_negative_r_rows_dropped_before_collapse(spark, tmp_path):
     assert len(kept) == 1 and kept[0].log_intensity == 0.0
 
 
+@needs_reference
 def test_mirna_seq_l_branch_not_rounded(spark, tmp_path):
     """The miRNA zscore calc's L branch stores intensity_value as
     log_intensity UNROUNDED (I2B2_MIRNA_ZSCORE_CALC.sql:132-151) —
@@ -391,6 +400,7 @@ def test_mirna_seq_l_branch_not_rounded(spark, tmp_path):
          {"10CP", "12PP", "18PP"}),
     ],
 )
+@needs_reference
 def test_serial_hdd_per_family(spark, omics, fixture_dir, expect_samples):
     """The four per-family SerialHDD processor tests share one
     contract: the dimension file's SeriesMeta XML lands on the

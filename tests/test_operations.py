@@ -3,6 +3,7 @@ MoveStudyOperationTest.groovy (408 LoC) and DeleteOperationTestCase
 assertions — on warehouse DataFrames."""
 
 import pytest
+from conftest import needs_reference
 
 from pyspark.sql import functions as F
 
@@ -16,18 +17,14 @@ from tmdataloader_spark.plans.operations import (
 )
 from tmdataloader_spark.sources.mapping import melt_clinical_study
 
-BASE = (
-    "/root/reference/fixtures/Test Studies/Test Study_GSE0/ClinicalDataToUpload/"
-    "Test Study_GSE0_Mapping_File.txt"
-)
 ROOT = "Test Studies Move Test"
 ORIGINAL = f"\\{ROOT}\\Test Study\\"
 
 
 @pytest.fixture(scope="module")
-def wh(spark):
+def wh(spark, gse0_mapping):
     res = load_clinical(
-        spark, melt_clinical_study(spark, BASE), "GSE0", ORIGINAL
+        spark, melt_clinical_study(spark, gse0_mapping), "GSE0", ORIGINAL
     )
     table_access = (
         res.i2b2.filter(F.col("c_hlevel") == 0)
@@ -62,6 +59,7 @@ def test_normalize_path():
     assert normalize_path(" \\a\\\\b ") == "\\a\\b\\"
 
 
+@needs_reference
 def test_move_in_one_root(wh):
     new = f"\\{ROOT}\\Test Study Update\\"
     out = move_study_by_path(wh, ORIGINAL, new)
@@ -88,6 +86,7 @@ def test_move_creates_new_root(wh):
     assert old_root not in paths(out.table_access, "c_fullname")
 
 
+@needs_reference
 def test_move_creates_new_level_and_counts(wh):
     new = f"\\{ROOT}\\New Level\\Test Study\\"
     out = move_study_by_path(wh, ORIGINAL, new)
@@ -126,6 +125,7 @@ def test_move_without_trailing_slash(wh):
     assert f"\\{ROOT}\\Test Study Wo Slash\\" in paths(out.i2b2, "c_fullname")
 
 
+@needs_reference
 def test_move_validations(wh):
     with pytest.raises(LoadValidationError, match="different old and new"):
         move_study_by_path(wh, ORIGINAL, ORIGINAL)
@@ -140,6 +140,7 @@ def test_move_validations(wh):
         )
 
 
+@needs_reference
 def test_move_subfolder_within_study(wh):
     # sub-node move must stay inside the study root
     with pytest.raises(LoadValidationError, match="inside of study root"):
@@ -290,6 +291,7 @@ def has_count_row(wh_, path):
     return wh_.concept_counts.filter(F.col("concept_path") == path).count() > 0
 
 
+@needs_reference
 def test_move_subfolder_demographics_counts(wh):
     r"""MoveStudyOperationTest.groovy:253-270 (testMoveSubfolder): move
     Language under a NEW 'Demographics new' folder; the recomputed
@@ -319,6 +321,7 @@ def test_move_subfolder_demographics_counts(wh):
         "Subjects new\\Demographics new\\",  # testMoveSubfolder3 (:299)
     ],
 )
+@needs_reference
 def test_move_subfolder_new_parent_levels_counts(wh, new_mid):
     r"""MoveStudyOperationTest.groovy:282-315: moving Language under
     one or two NEW intermediate folders fills the levels in and rolls
@@ -340,6 +343,7 @@ def test_move_subfolder_new_parent_levels_counts(wh, new_mid):
     assert ORIGINAL + new_mid in paths(out.i2b2, "c_fullname")
 
 
+@needs_reference
 def test_move_subfolder_mutation_leaf_counts(wh):
     r"""MoveStudyOperationTest.groovy:271-281 (testMoveSubfolder4):
     moving the 3-patient ELREA746del mutation leaf out from under
@@ -354,6 +358,7 @@ def test_move_subfolder_mutation_leaf_counts(wh):
     assert count_at(out, new) == 3
 
 
+@needs_reference
 def test_move_study_with_few_levels_chained(wh):
     r"""MoveStudyOperationTest.groovy:115-135 (testMoveStudyWithFewLevels,
     single-study adaptation): chained moves through multi-level paths
@@ -374,6 +379,7 @@ def test_move_study_with_few_levels_chained(wh):
     assert count_at(out2, p2) == 9
 
 
+@needs_reference
 def test_move_double_change_top_counts_scope(wh):
     r"""MoveStudyOperationTest.groovy:333-366
     (testItCheckUpdateConceptCountsWIthDoubleChangeTop +

@@ -346,7 +346,7 @@ def test_gene_backfill_lookups_are_broadcast(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_merge_security_rebuild_is_broadcast_and_codegen(spark):
+def test_merge_security_rebuild_is_broadcast_and_codegen(spark, gse0_mapping):
     """§2.10a r13 SECURITY delete-then-insert rebuild
     (plans/merge.py:352-392, i2b2_create_security_for_trial.sql
     delete :62-66 / insert :70-98): the per-trial token is a ONE-ROW
@@ -360,13 +360,9 @@ def test_merge_security_rebuild_is_broadcast_and_codegen(spark):
     from tmdataloader_spark.plans.merge import MergeMode, merge_clinical_load
     from tmdataloader_spark.sources.mapping import melt_clinical_study
 
-    mapping = (
-        "/root/reference/fixtures/Test Studies/Test Study_GSE0/"
-        "ClinicalDataToUpload/Test Study_GSE0_Mapping_File.txt"
-    )
     top = "\\Test Studies\\Test Study\\"
     base = load_clinical(
-        spark, melt_clinical_study(spark, mapping), "GSE0", top
+        spark, melt_clinical_study(spark, gse0_mapping), "GSE0", top
     )
     merged = merge_clinical_load(base, base, MergeMode.UPDATE, "GSE0", top)
     plan = _plan(spark, merged.observation_fact, "simple")

@@ -2,6 +2,7 @@
 (SNPDataProcessorTest / ACGH assertions re-expressed on DataFrames)."""
 
 import pytest
+from conftest import needs_reference
 
 from pyspark.sql import functions as F
 
@@ -22,6 +23,7 @@ def acgh(spark):
     return load_acgh(spark, f"{FIX}/ACGHDataToUpload", "TSTA", TOP)
 
 
+@needs_reference
 def test_snp_sample_data_full_join(snp):
     pdf = snp.sample_snp_data.toPandas()
     assert set(pdf.gsm_num.unique()) == {"TST001", "TST002", "TST003"}
@@ -32,6 +34,7 @@ def test_snp_sample_data_full_join(snp):
     assert one.iloc[0].snp_calls == "1"
 
 
+@needs_reference
 def test_snp_dataset_registry(snp):
     rows = snp.snp_dataset.collect()
     assert len(rows) == 3
@@ -39,6 +42,7 @@ def test_snp_dataset_registry(snp):
     assert all(r["trial_name"] == "GSE0" for r in rows)
 
 
+@needs_reference
 def test_snp_zscore_kernel(snp):
     pdf = snp.data.toPandas()
     assert pdf.zscore.between(-2.5, 2.5).all()
@@ -48,6 +52,7 @@ def test_snp_zscore_kernel(snp):
     assert len(pdf) == cn_rows
 
 
+@needs_reference
 def test_snp_gene_map_novelty(spark, snp):
     inc = spark.createDataFrame(
         [("s1", 10), ("s2", 20)], "snp_name string, entrez_gene_id long"
@@ -57,6 +62,7 @@ def test_snp_gene_map_novelty(spark, snp):
     assert [(r.snp_name, r.entrez_gene_id) for r in out] == [("s2", 20)]
 
 
+@needs_reference
 def test_acgh_regions(acgh):
     regions = acgh.chromosomal_region.toPandas()
     assert (regions.gpl_id == "TST_ACGH").all()
@@ -64,6 +70,7 @@ def test_acgh_regions(acgh):
     assert regions.region_id.is_unique
 
 
+@needs_reference
 def test_acgh_data_typed_metrics(acgh):
     pdf = acgh.data.toPandas()
     # 2 samples (both mapped) x regions present in the platform
@@ -77,11 +84,13 @@ def test_acgh_data_typed_metrics(acgh):
     assert abs(sorted(by_assay.chip.tolist())[0] - 0.666) < 1e-9
 
 
+@needs_reference
 def test_acgh_no_zscore(acgh):
     # the reference keeps aCGH values as loaded (no z-score column)
     assert "zscore" not in acgh.data.columns
 
 
+@needs_reference
 def test_snp_merge_samples(spark, snp):
     """SNPDataProcessorTest.testItMergeSamples: reloading the
     additional-studies SNP directory replaces the overlapping sample's

@@ -3,6 +3,7 @@ r"""Study-directory orchestration + audit + metadata e2e
 MetaDataProcessor on the fixture's MetaDataToUpload)."""
 
 import pytest
+from conftest import REFERENCE_GSE0, needs_reference
 
 from pyspark.sql import functions as F
 
@@ -13,18 +14,19 @@ from tmdataloader_spark.plans.study import (
     load_study,
 )
 
-STUDY_DIR = "/root/reference/fixtures/Test Studies/Test Study_GSE0"
+STUDY_DIR = REFERENCE_GSE0
 GOLDEN_NODE = (
     "\\Test Studies\\Test Study\\Biomarker Data\\Mutations\\"
     "TST001 (Entrez ID: 1956)\\AA mutation\\"
 )
 
 
-def test_is_study_dir():
-    assert is_study_dir(STUDY_DIR)
-    assert not is_study_dir(STUDY_DIR + "/ClinicalDataToUpload")
+def test_is_study_dir(gse0_study):
+    assert is_study_dir(gse0_study)
+    assert not is_study_dir(gse0_study + "/ClinicalDataToUpload")
 
 
+@needs_reference
 def test_discover_studies():
     found = discover_studies("/root/reference/fixtures/Test Studies")
     dirs = {d for d, _ in found}
@@ -33,10 +35,11 @@ def test_discover_studies():
 
 
 @pytest.fixture(scope="module")
-def loaded(spark):
-    return load_study(spark, STUDY_DIR, "\\Test Studies")
+def loaded(spark, gse0_study):
+    return load_study(spark, gse0_study, "\\Test Studies")
 
 
+@needs_reference
 def test_manifest_routing(loaded):
     status = {m[0]: m[2] for m in loaded.manifest}
     assert status["Clinical"] == "DONE"
@@ -48,12 +51,14 @@ def test_manifest_routing(loaded):
     assert loaded.succeeded
 
 
+@needs_reference
 def test_clinical_result_golden(loaded):
     counts = loaded.results["Clinical"].concept_counts
     row = counts.filter(F.col("concept_path") == GOLDEN_NODE).collect()
     assert row and row[0]["patient_count"] == 9
 
 
+@needs_reference
 def test_vcf_and_expression_results(loaded):
     assert loaded.results["VCF"].datasets[0].dataset_id == "GSE0:VCFTEST"
     assert loaded.results["Expression"].data.count() > 0
@@ -73,6 +78,7 @@ def test_audit_frames(loaded, spark):
     assert audit.job_errors(spark).count() == 0
 
 
+@needs_reference
 def test_metadata_load(loaded, spark):
     meta = loaded.results["Meta"]
     exp = meta.bio_experiment.collect()
@@ -203,6 +209,7 @@ def test_typed_metadata_links(spark, tmp_path):
     }
 
 
+@needs_reference
 def test_metadata_creates_study_folders(spark):
     """MetaDataProcessorTest.groovy:93-121 (testCreateStudyFolder) on
     the GSE0 fixture: the etl-program PROGRAM folder exists at level 0,
@@ -229,6 +236,7 @@ def test_metadata_creates_study_folders(spark):
     ]
 
 
+@needs_reference
 def test_metadata_folders_idempotent_with_existing(spark):
     """Second load with the folders/associations from the first
     passed as the existing state: the program folder is reused (not

@@ -4,6 +4,8 @@ reference's shipped expectation (SURVEY.md §5, ClinicalDataProcessorTest
 
 import io
 
+from conftest import needs_reference
+
 from tmdataloader_spark.statistic.summary import summary_statistics, write_report
 
 MAPPING = (
@@ -16,6 +18,7 @@ GOLDEN = (
 )
 
 
+@needs_reference
 def test_summary_statistic_golden(spark):
     rows = summary_statistics(spark, MAPPING)
     buf = io.StringIO()
@@ -29,7 +32,7 @@ def test_summary_statistic_golden(spark):
         assert a == e, f"line {i} differs:\n  actual:   {a!r}\n  expected: {e!r}"
 
 
-def test_exact_stats_guard_rejects_oversized_file(spark, monkeypatch):
+def test_exact_stats_guard_rejects_oversized_file(spark, monkeypatch, gse0_mapping):
     """The exact-median kernel is contract-bounded: a file larger than
     MAX_EXACT_STAT_ROWS fails fast with LoadValidationError instead of
     materializing a giant collect_list buffer."""
@@ -41,9 +44,10 @@ def test_exact_stats_guard_rejects_oversized_file(spark, monkeypatch):
     from pathlib import Path
 
     monkeypatch.setattr(summary, "MAX_EXACT_STAT_ROWS", 5)
-    fname, fm = next(iter(parse_mapping_file(Path(MAPPING)).items()))
+    mapping = Path(gse0_mapping)
+    fname, fm = next(iter(parse_mapping_file(mapping).items()))
     with pytest.raises(LoadValidationError, match="exact-statistics"):
-        summary.collect_file_statistics(spark, Path(MAPPING).parent / fname, fm)
+        summary.collect_file_statistics(spark, mapping.parent / fname, fm)
 
 
 import pytest

@@ -7,30 +7,19 @@ Scale notes; PERF_NOTES.md "Upload path"). A frame that two actions
 read and that is not materialized is rebuilt by each of them, which
 shows here as extra jobs long before it shows as wall time."""
 
-import importlib.util
 import os
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from conftest import load_gen_study
 
 from tmdataloader_spark import cli
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: Spark jobs of one upload of the study below: measured 60, a few jobs
 #: of headroom added. It measured 99 before the clinical node table and
 #: facts were materialized, the TSV headers read on the driver and the
 #: HDD mapping guards folded into one aggregate.
 MAX_UPLOAD_JOBS = 64
-
-
-def _gen_study():
-    spec = importlib.util.spec_from_file_location(
-        "gen_study", os.path.join(ROOT, "perfbench", "gen_study.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def _study_rows(wh: str, study: dict) -> dict:
@@ -53,7 +42,7 @@ def _study_rows(wh: str, study: dict) -> dict:
 
 
 def test_upload_rows_and_job_count(spark, tmp_path):
-    study = _gen_study().write_study(
+    study = load_gen_study().write_study(
         str(tmp_path / "input"), seed=1, n_subjects=10, n_probes=50
     )
     wh = str(tmp_path / "warehouse")

@@ -3,6 +3,7 @@ assertions of src/test/groovy/.../etl/VCFDataProcessorTest.groovy
 (311 LoC) — no database, all on DataFrames."""
 
 import pytest
+from conftest import needs_reference
 from pyspark.sql import functions as sf
 
 from tmdataloader_spark.plans.vcf import load_vcf_study
@@ -34,6 +35,7 @@ def one(df, **filters):
     return r[0]
 
 
+@needs_reference
 def test_mapping_and_platform(result):
     # VCFDataProcessorTest: platform VCF_hg36 from GENOME_BUILD header
     assert result.study_id == "GSE0"
@@ -42,12 +44,14 @@ def test_mapping_and_platform(result):
     assert result.datasets[0].dataset_id == "GSE0:VCFTEST"
 
 
+@needs_reference
 def test_subject_idx(result):
     ds = result.datasets[0]
     assert one(ds.subject_idx, subject_id="VCF_TST001")["position"] == 1
     assert one(ds.subject_idx, subject_id="VCF_TST002")["position"] == 2
 
 
+@needs_reference
 def test_subject_summary_subject1(result):
     ss = result.datasets[0].subject_summary
     r = one(ss, subject_id="VCF_TST001", pos=16050408)
@@ -70,6 +74,7 @@ def test_subject_summary_subject1(result):
     assert rows(ss, pos=16050624) == []
 
 
+@needs_reference
 def test_subject_summary_subject2(result):
     ss = result.datasets[0].subject_summary
     r = one(ss, subject_id="VCF_TST002", pos=16050408)
@@ -85,6 +90,7 @@ def test_subject_summary_subject2(result):
     assert (r["allele1"], r["allele2"]) == (0, None)
 
 
+@needs_reference
 def test_assay_linkage(result):
     # J10: every summary row carries the assay of its sample mapping
     ss = result.datasets[0].subject_summary
@@ -93,12 +99,14 @@ def test_assay_linkage(result):
         assert r["assay_id"] == samples[r["subject_id"]]
 
 
+@needs_reference
 def test_population_info(result):
     pi = one(result.datasets[0].population_info, info_name="LDAF")
     assert pi["description"] == "MLE Allele Frequency Accounting for LD"
     assert (pi["type"], pi["number"]) == ("Float", "1")
 
 
+@needs_reference
 def test_population_data(result):
     pd_ = result.datasets[0].population_data
     # undeclared INFO field dropped
@@ -118,6 +126,7 @@ def test_population_data(result):
     assert r["text_value"] == "SNP"
 
 
+@needs_reference
 def test_subject_detail(result):
     sd = result.datasets[0].subject_detail
     r = one(sd, pos=16050408, rs_id="rs149201999")
@@ -132,6 +141,7 @@ def test_subject_detail(result):
         assert r["ref"] == "C" and r["format"] == "DS:GL"
 
 
+@needs_reference
 def test_sample_nodes(result):
     # hasNode('\Test Studies\Test Study\VCF\VCFTest\'): category VCF+VCFTest
     paths = [r["c_fullname"] for r in rows(result.i2b2)]
@@ -142,6 +152,7 @@ def test_sample_nodes(result):
     assert sm["concept_path"] == TOP + "VCF\\VCFTest\\"
 
 
+@needs_reference
 def test_multi_vcf(spark):
     res = load_vcf_study(spark, MULTI_FIXTURE, TOP)
     assert res.platform_id == "VCF"  # no GENOME_BUILD header
@@ -189,6 +200,7 @@ def test_unmapped_samples_fail(spark, tmp_path):
         load_vcf_study(spark, str(d), TOP)
 
 
+@needs_reference
 def test_multi_vcf_with_configured_paths(spark):
     """VCFDataProcessorTest.testItLoadsMultipleVcfFilesWithConfiguredPaths
     (:248-303): the subject-sample mapping's CATEGORY_CD overrides the
