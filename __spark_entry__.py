@@ -1698,7 +1698,7 @@ def q_hdd_leaf_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         platform="GPL1", title="Test GEX Platform", organism="Homo sapiens",
         marker_type="MRNA", annotation=None,
     )
-    samples = build_sample_mapping(mapping, "\\Public Studies\\Study X\\", platform)
+    samples = build_sample_mapping(mapping, "\\Public Studies\\Study X\\", [platform])
     return samples.select("sample_cd", "sourcesystem_cd", "concept_path")
 
 

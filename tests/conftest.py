@@ -1,8 +1,10 @@
 import glob
+import hashlib
 import importlib.util
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from tmdataloader_spark.session import get_spark
 
@@ -28,6 +30,50 @@ def load_gen_study():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
+
+
+def write_lines(path, lines):
+    """Write ``lines`` as a text file, one a line."""
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+    return str(path)
+
+
+def sorted_rows(df, *cols):
+    """A frame's rows (``cols`` only, if given) as sorted tuples."""
+    return sorted((tuple(r) for r in df.select(*(cols or df.columns)).collect()), key=repr)
+
+
+def basecode(path):
+    """The concept code of an ontology path: its sha256 hex, 16 chars."""
+    return hashlib.sha256(path.encode()).hexdigest()[:16]
+
+
+def sample_row(spark, trial, subject, sample, gpl, marker, category, path, *,
+               tissue=None, attr1=None, attr2=None, source="STD"):
+    """The de_subject_sample_mapping row of one sample without a site, in
+    ``build_sample_mapping``'s column order: ``patient_id`` is Spark's
+    xxhash64 of ``trial:subject`` and ``assay_id`` that of
+    ``trial:sample:gpl:source``."""
+    usub = f"{trial}:{subject}"
+    patient_id, assay_id = spark.range(1).select(
+        F.xxhash64(F.lit(usub)), F.xxhash64(F.lit(f"{trial}:{sample}:{gpl}:{source}"))
+    ).first()
+    return (
+        trial, usub, patient_id, assay_id, sample, marker, gpl, tissue, attr1, attr2,
+        attr1, attr2, category, path, basecode(path), source,
+    )
+
+
+def node_rows(*leaves):
+    """The ``(c_fullname, c_visualattributes, c_basecode)`` rows of the
+    ontology over these leaf paths: each leaf LAH, every ancestor FA."""
+    kinds = {}
+    for leaf in leaves:
+        parts = leaf.strip("\\").split("\\")
+        for i in range(1, len(parts)):
+            kinds.setdefault("\\" + "\\".join(parts[:i]) + "\\", "FA")
+    kinds.update(dict.fromkeys(leaves, "LAH"))
+    return sorted((p, kind, basecode(p)) for p, kind in kinds.items())
 
 
 @pytest.fixture(scope="session")

@@ -107,7 +107,7 @@ def test_metabolomics_data_processor_loads_data(spark):
     # assertThatSampleIsPresent('14PP', ['HMDB0TEST': 5095]) — the
     # Groovy joins data→annotation on hmdb_id; resolve the probe the
     # same way
-    probe = res.platform.annotation.filter(
+    probe = res.platforms[0].annotation.filter(
         F.col("HMDB_ID") == "HMDB0TEST"
     ).select("probeset_id").collect()
     assert len(probe) == 1

@@ -1,7 +1,7 @@
 """GWAS PLINK loader + process lock tests."""
 
 import pytest
-from conftest import needs_reference
+from conftest import needs_reference, node_rows, sample_row, sorted_rows, write_lines
 
 from tmdataloader_spark.operators.dedup import LoadValidationError
 from tmdataloader_spark.plans.gwas import load_gwas_plink, validate_fam
@@ -40,6 +40,27 @@ def test_gwas_plink_load(spark):
 
     verbatim = load_gwas_plink(spark, FIX, TOP, codec="none").plink_data.collect()[0]
     assert decompress(bytes(row["bed"])) == bytes(verbatim["bed"])
+
+
+def test_gwas_plink_small_study_samples_and_nodes(spark, tmp_path):
+    """Every fam subject is a sample of itself, on no platform, under
+    the default ``GWAS+GWAS Plink`` category."""
+    d = tmp_path / "GWASPlinkDataToUpload"
+    d.mkdir()
+    write_lines(d / "GWAS_MappingFile.txt", ["# STUDY_ID: gwas1"])
+    (d / "small.bed").write_bytes(b"\x6c\x1b\x01\x00")
+    write_lines(d / "small.bim", ["1\trs1\t0\t100\tA\tG"])
+    write_lines(d / "small.fam", ["F1 I1 0 0 1 -9", "F2 I2 0 0 2 -9"])
+    res = load_gwas_plink(spark, str(d), TOP, codec="none")
+    assert res.study_id == "GWAS1"
+    path = TOP + "GWAS\\GWAS Plink\\"
+    assert sorted_rows(res.sample_mapping) == sorted([
+        sample_row(spark, "GWAS1", iid, iid, "", "GWAS", "GWAS+GWAS Plink", path)
+        for iid in ("I1", "I2")
+    ], key=repr)
+    assert sorted_rows(res.i2b2, "c_fullname", "c_visualattributes", "c_basecode") == (
+        node_rows(path)
+    )
 
 
 def test_fam_validation(tmp_path):

@@ -10,7 +10,7 @@ import pytest
 from conftest import needs_reference
 from pyspark.sql import functions as F
 
-from tmdataloader_spark.plans.hdd import load_expression, write_partitioned
+from tmdataloader_spark.plans.hdd import load_hdd, write_partitioned
 
 TOP = "\\Test Studies\\Test Study\\"
 
@@ -22,7 +22,7 @@ def data_dir(gse0_study):
 
 @pytest.fixture(scope="module")
 def result(spark, data_dir):
-    return load_expression(spark, data_dir, "GSE0", TOP)
+    return load_hdd(spark, data_dir, "GSE0", TOP)
 
 
 def _oracle_zscores(data_dir):
@@ -142,9 +142,9 @@ def test_merge_samples_reload(spark, result):
     additional-studies reload replaces overlapping samples' values,
     adds new samples, keeps the rest, and the Blood subtree grows from
     32 to 33 distinct patients."""
-    from tmdataloader_spark.plans.hdd import load_expression, merge_hdd_samples
+    from tmdataloader_spark.plans.hdd import load_hdd, merge_hdd_samples
 
-    second = load_expression(
+    second = load_hdd(
         spark,
         "/root/reference/fixtures/Additional Test Studies/Test Study_GSE0/"
         "ExpressionDataToUpload",
@@ -197,11 +197,11 @@ def test_same_samples_different_platforms(spark):
     """ExpressionDataProcessorTest.testItLoadsSameSamplesForDifferentPlatforms:
     the same sample codes loaded on two platforms coexist as distinct
     assays with their own values and their own platform subtrees."""
-    from tmdataloader_spark.plans.hdd import load_expression, merge_hdd_samples
+    from tmdataloader_spark.plans.hdd import load_hdd, merge_hdd_samples
 
     base = "/root/reference/fixtures/Additional Test Studies/Test Study_GSE0/"
-    a = load_expression(spark, base + "ExpressionDataToUpload", "GSE0", TOP)
-    b = load_expression(spark, base + "ExpressionDataToUpload_OtherPlatform", "GSE0", TOP)
+    a = load_hdd(spark, base + "ExpressionDataToUpload", "GSE0", TOP)
+    b = load_hdd(spark, base + "ExpressionDataToUpload_OtherPlatform", "GSE0", TOP)
     data, mapping = merge_hdd_samples(a.data, a.sample_mapping, b.data, b.sample_mapping)
     sm = mapping.toPandas()
 
@@ -275,7 +275,8 @@ def test_load_samples_node_templating_mirrors_reference(spark):
     to the per-row gpl title (empty for a null platform), TISSUETYPE to
     the tissue or its default, and the two samples' subtrees never
     cross (no combined platform+Blood node)."""
-    from tmdataloader_spark.plans.hdd import build_hdd_nodes
+    from tmdataloader_spark.plans.hdd import build_hdd_nodes, build_sample_mapping
+    from tmdataloader_spark.sources.gpl import GplPlatform
 
     top = "\\Test Studies\\Loader Test\\"
     mapping = spark.createDataFrame(
@@ -288,14 +289,13 @@ def test_load_samples_node_templating_mirrors_reference(spark):
         "trial_name string, subject_id string, sample_cd string, "
         "platform string, tissue_type string, attribute_1 string, "
         "attribute_2 string, category_cd string",
+    ).withColumns({"site_id": F.lit(None).cast("string"), "source_cd": F.lit("STD")})
+    gpl = GplPlatform(
+        platform="LDR_TST", title="Loader Test Platform", organism="Homo sapiens",
+        marker_type="Gene Expression", annotation=None,
     )
-    gpl = spark.createDataFrame(
-        [("LDR_TST", "Loader Test Platform")], "platform string, title string"
-    )
-    nodes = {
-        r["c_fullname"]
-        for r in build_hdd_nodes(mapping, top, "", gpl_info=gpl).collect()
-    }
+    samples = build_sample_mapping(mapping, top, [gpl])
+    nodes = {r["c_fullname"] for r in build_hdd_nodes(samples).collect()}
     # reference assertions (hasNode / not(hasNode))
     assert f"{top}LDR\\Loader Test Platform\\" in nodes
     assert f"{top}LDR\\Blood\\" in nodes

@@ -8,6 +8,7 @@ import ast
 import os
 
 import pytest
+from conftest import write_lines
 
 from tmdataloader_spark.operators.dedup import LoadValidationError
 from tmdataloader_spark.plans.hdd import (
@@ -29,34 +30,32 @@ def _row(study, subject, sample, platform, category=CATEGORY):
     return f"{study}\t\t{subject}\t{sample}\t{platform}\tBlood\t\t\t{category}"
 
 
-def _write(path, lines):
-    with open(path, "w", encoding="utf-8") as fh:
-        fh.write("\n".join(lines) + "\n")
-    return str(path)
-
-
 def _mapping(tmp_path, rows):
-    return _write(tmp_path / "S1_Subject_Sample_Mapping_File.txt", [HEADER, *rows])
+    return write_lines(tmp_path / "S1_Subject_Sample_Mapping_File.txt", [HEADER, *rows])
 
 
 def _expression_dir(tmp_path, rows, platforms=("GPL1",)):
     """An ExpressionDataToUpload dir: the mapping, one GPL file per
-    platform and a raw matrix over the mapping's samples."""
+    platform titled ``Array <gpl>``, and a raw matrix over the mapping's
+    samples. Every platform annotates probes 1_at and 2_at; the ones
+    after the first also annotate 3_at, which the matrix holds too."""
     d = tmp_path / "ExpressionDataToUpload"
     d.mkdir()
-    _write(d / "S1_Subject_Sample_Mapping_File.txt", [HEADER, *rows])
+    write_lines(d / "S1_Subject_Sample_Mapping_File.txt", [HEADER, *rows])
     for gpl in platforms:
-        _write(d / f"{gpl}.txt", [
+        write_lines(d / f"{gpl}.txt", [
             f"#PLATFORM_TITLE: Array {gpl}",
             "ID\tGene Symbol\tENTREZ_GENE_ID\tSpecies Scientific Name",
             "1_at\tTP53\t7157\tHomo sapiens",
             "2_at\tEGFR\t1956\tHomo sapiens",
+            *(["3_at\tKRAS\t3845\tHomo sapiens"] if gpl != platforms[0] else []),
         ])
     samples = sorted({r.split("\t")[3] for r in rows})
-    _write(d / "S1_Gene_Expression_Data_R.txt", [
+    write_lines(d / "S1_Gene_Expression_Data_R.txt", [
         "\t".join(["ID_REF", *samples]),
         "\t".join(["1_at", *("5.0" for _ in samples)]),
         "\t".join(["2_at", *("7.0" for _ in samples)]),
+        "\t".join(["3_at", *("9.0" for _ in samples)]),
     ])
     return str(d)
 
@@ -169,3 +168,26 @@ def test_load_hdd_resolves_trial_from_mapping(spark, tmp_path):
     assert res.trial_id == "S1"
     assert {r[0] for r in res.sample_mapping.select("trial_name").collect()} == {"S1"}
     assert res.data.count() == 4
+
+
+def test_load_hdd_reads_every_platform(spark, tmp_path):
+    """A mapping whose samples sit on two platforms reads both platform
+    files: each sample's concept path carries its own platform's title,
+    the ontology has both subtrees, and each assay keeps exactly the
+    probes its own platform annotates (3_at is on GPL2 only)."""
+    rows = [_row("S1", "P0", "SMP0", "GPL1"), _row("S1", "P1", "SMP1", "GPL2")]
+    d = _expression_dir(tmp_path, rows, platforms=("GPL1", "GPL2"))
+    res = load_hdd(spark, d, "S1", TOP)
+    paths = dict(res.sample_mapping.select("sample_cd", "concept_path").collect())
+    assert paths == {
+        "SMP0": TOP + "Biomarker Data\\Array GPL1\\Blood\\",
+        "SMP1": TOP + "Biomarker Data\\Array GPL2\\Blood\\",
+    }
+    nodes = {r[0] for r in res.i2b2.select("c_fullname").collect()}
+    assert set(paths.values()) <= nodes
+    sample_of = dict(res.sample_mapping.select("assay_id", "sample_cd").collect())
+    probes = {}
+    for assay, probe in res.data.select("assay_id", "probeset_id").collect():
+        probes.setdefault(sample_of[assay], set()).add(probe)
+    assert probes == {"SMP0": {"1_at", "2_at"}, "SMP1": {"1_at", "2_at", "3_at"}}
+    assert [p.title for p in res.platforms] == ["Array GPL1", "Array GPL2"]

@@ -117,13 +117,13 @@ def test_omics_load_matches_oracle(spark, omics):
     data_dir, trial, data_file, probe_idx, first_sample_idx = CASES[omics]
     kind = omics.rstrip("23")
     res = load_hdd(spark, data_dir, trial, TOP, kind)
-    assert res.platform.marker_type == OMICS_TYPES[kind].marker_type
+    assert res.platforms[0].marker_type == OMICS_TYPES[kind].marker_type
 
     got = res.data.toPandas()
     assert (got.trial_name == trial).all()
 
     probes = set(
-        r[0] for r in res.platform.annotation.select("probeset_id").distinct().collect()
+        r[0] for r in res.platforms[0].annotation.select("probeset_id").distinct().collect()
     )
     ot = OMICS_TYPES[kind]
     style = "dct" if ot.data_type_override == "C" else ot.r_zero
@@ -158,10 +158,10 @@ def test_rbm_long_format(spark):
     )
     pdf = res.data.toPandas()
     assert len(pdf) > 0
-    assert res.platform.marker_type == "RBM"
+    assert res.platforms[0].marker_type == "RBM"
     # probes come from the platform's antigen_name column
     probes = {
-        r[0] for r in res.platform.annotation.select("probeset_id").collect()
+        r[0] for r in res.platforms[0].annotation.select("probeset_id").collect()
     }
     assert set(pdf.probeset_id).issubset(probes)
     assert pdf.zscore.between(-2.5, 2.5).all()

@@ -597,10 +597,10 @@ def test_mrna_frames_land_in_deapp_ddl(spark, deapp_omics):
     INSIDE Postgres from the landed rows."""
     from pyspark.sql import functions as F
 
-    from tmdataloader_spark.plans.hdd import load_expression
+    from tmdataloader_spark.plans.hdd import load_hdd
 
     dsn, part_id = deapp_omics
-    res = load_expression(
+    res = load_hdd(
         spark,
         "/root/reference/fixtures/Test Studies/Test Study_GSE0/"
         "ExpressionDataToUpload",

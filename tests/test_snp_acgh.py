@@ -1,8 +1,9 @@
 """SNP and aCGH pipeline e2e on the reference fixtures
-(SNPDataProcessorTest / ACGH assertions re-expressed on DataFrames)."""
+(SNPDataProcessorTest / ACGH assertions re-expressed on DataFrames),
+and on tiny hand-written upload directories (FIXTURES.md §7-8)."""
 
 import pytest
-from conftest import needs_reference
+from conftest import needs_reference, node_rows, sample_row, sorted_rows, write_lines
 
 from pyspark.sql import functions as F
 
@@ -191,3 +192,149 @@ def test_acgh_region_gene_backfill(spark):
     assert out["r3"] == ("BRCA1", 672)
     assert out["r4"] == ("NOSUCH", None)
     assert out["r5"] == ("TP53", 22059)
+
+
+MAPPING_HEADER = (
+    "STUDY_ID\tSITE_ID\tSUBJECT_ID\tSAMPLE_ID\tPLATFORM\tTISSUETYPE\tATTR1\tATTR2"
+    "\tCATEGORY_CD"
+)
+SNP_CATEGORY = "Biomarker_Data+SNP+PLATFORM+TISSUETYPE+ATTR1"
+
+
+def _snp_dir(tmp_path, platforms=("GPL101",)):
+    """An SNPDataToUpload dir: sample SMP1 (subject P1, Tumor, ATTR1
+    Primary) on the first platform and SMP2 (P2, no tissue) on the last,
+    each with a calls file and a copy-number file, and one GPL file per
+    platform titled ``SNP Array <gpl>``."""
+    d = tmp_path / "SNPDataToUpload"
+    d.mkdir()
+    rows = []
+    for n, gpl, tissue, attr1 in ((1, platforms[0], "Tumor", "Primary"), (2, platforms[-1], "", "")):
+        rows.append(
+            f"SMP{n}_Calls.txt\tSMP{n}_CopyNumber.txt\tsnp1\t\tP{n}\tSMP{n}\t{gpl}"
+            f"\t{tissue}\t{attr1}\t\t{SNP_CATEGORY}"
+        )
+        write_lines(d / f"SMP{n}_Calls.txt", [
+            "SAMPLE_ID\tPROBESET_ID\tCALLS", f"SMP{n}\tSNP_1\t1", f"SMP{n}\tSNP_2\t2",
+        ])
+        write_lines(d / f"SMP{n}_CopyNumber.txt", [
+            "SAMPLE_ID\tPROBESET_ID\tCHROM\tCHROM_POS\tCOPY_NUMBER",
+            f"SMP{n}\tSNP_1\t1\t1000\t0.{n}",
+            f"SMP{n}\tSNP_2\t1\t2000\t-0.{n}",
+        ])
+    write_lines(d / "snp1_Subject_Sample_Mapping_File.txt", [
+        "CALLS_FILE_NAME\tCOPY_NUMBER_FILE_NAME\t" + MAPPING_HEADER, *rows,
+    ])
+    for gpl in platforms:
+        write_lines(d / f"{gpl}.txt", [
+            f"#PLATFORM_TITLE: SNP Array {gpl}",
+            "ID\tGene Symbol\tENTREZ_GENE_ID",
+            "SNP_1\tTP53\t7157",
+            "SNP_2\tEGFR\t1956",
+        ])
+    return str(d)
+
+
+def test_snp_small_study_samples_and_nodes(spark, tmp_path):
+    """Each sample's concept path is its category with PLATFORM,
+    TISSUETYPE and ATTR1 filled in (an empty tissue is Blood, an empty
+    ATTR1 drops out), and the ontology is those leaves and their
+    folders."""
+    res = load_snp(spark, _snp_dir(tmp_path), "SNP1", TOP)
+    path1 = TOP + "Biomarker Data\\SNP\\SNP Array GPL101\\Tumor\\Primary\\"
+    path2 = TOP + "Biomarker Data\\SNP\\SNP Array GPL101\\Blood\\"
+    assert sorted_rows(res.sample_mapping) == sorted([
+        sample_row(spark, "SNP1", "P1", "SMP1", "GPL101", "SNP", SNP_CATEGORY, path1,
+                   tissue="Tumor", attr1="Primary"),
+        sample_row(spark, "SNP1", "P2", "SMP2", "GPL101", "SNP", SNP_CATEGORY, path2,
+                   tissue="Blood"),
+    ], key=repr)
+    assert sorted_rows(res.i2b2, "c_fullname", "c_visualattributes", "c_basecode") == (
+        node_rows(path1, path2)
+    )
+    assert res.sample_snp_data.count() == 4
+
+
+def test_snp_samples_take_their_own_platform_title(spark, tmp_path):
+    """A mapping over two platforms templates each sample's path with
+    the title of that sample's platform."""
+    res = load_snp(spark, _snp_dir(tmp_path, ("GPL101", "GPL102")), "SNP1", TOP)
+    paths = dict(res.sample_mapping.select("sample_cd", "concept_path").collect())
+    assert paths == {
+        "SMP1": TOP + "Biomarker Data\\SNP\\SNP Array GPL101\\Tumor\\Primary\\",
+        "SMP2": TOP + "Biomarker Data\\SNP\\SNP Array GPL102\\Blood\\",
+    }
+
+
+ACGH_CATEGORY = "Biomarker_Data+aCGH+PLATFORM+TISSUETYPE"
+
+
+def _acgh_dir(tmp_path, platforms=("GPL201",)):
+    """An ACGHDataToUpload dir: sample SMP1 (subject P1, Tumor) on the
+    first platform and SMP2 (P2, no tissue) on the last, a data file with
+    the seven metric columns per sample over two regions, and one region
+    file per platform titled ``aCGH Regions <gpl>``. The first platform
+    holds both regions, any other only the first."""
+    d = tmp_path / "ACGHDataToUpload"
+    d.mkdir()
+    write_lines(d / "acgh1_Subject_Sample_Mapping_File.txt", [
+        MAPPING_HEADER,
+        f"acgh1\t\tP1\tSMP1\t{platforms[0]}\tTumor\t\t\t{ACGH_CATEGORY}",
+        f"acgh1\t\tP2\tSMP2\t{platforms[-1]}\t\t\t\t{ACGH_CATEGORY}",
+    ])
+    regions = [
+        "chr1:100-200\t1\t100\t200\t5\tp36.33\tTP53",
+        "chr1:300-400\t1\t300\t400\t7\tp36.32\tEGFR",
+    ]
+    for gpl in platforms:
+        write_lines(d / f"{gpl}_region_platform.txt", [
+            f"#PLATFORM_TITLE: aCGH Regions {gpl}",
+            "REGION_NAME\tCHROMOSOME\tSTART_BP\tEND_BP\tNUM_PROBES\tCYTOBAND\tGENE_SYMBOL",
+            *(regions if gpl == platforms[0] else regions[:1]),
+        ])
+    metrics = ["chip", "segmented", "flag", "probloss", "probnorm", "probgain", "probamp"]
+    write_lines(d / "acgh1_acgh_data.txt", [
+        "\t".join(["region_id"] + [f"{s}.{m}" for s in ("SMP1", "SMP2") for m in metrics]),
+        "\t".join(["chr1:100-200"] + ["0.5", "0.25", "1", "0.1", "0.2", "0.3", "0.4"] * 2),
+        "\t".join(["chr1:300-400"] + ["-0.5", "-0.25", "-1", "0.4", "0.3", "0.2", "0.1"] * 2),
+    ])
+    return str(d)
+
+
+def test_acgh_small_study_samples_and_nodes(spark, tmp_path):
+    res = load_acgh(spark, _acgh_dir(tmp_path), None, TOP)
+    path1 = TOP + "Biomarker Data\\aCGH\\aCGH Regions GPL201\\Tumor\\"
+    path2 = TOP + "Biomarker Data\\aCGH\\aCGH Regions GPL201\\Blood\\"
+    assert sorted_rows(res.sample_mapping) == sorted([
+        sample_row(spark, "ACGH1", "P1", "SMP1", "GPL201", "aCGH", ACGH_CATEGORY, path1,
+                   tissue="Tumor"),
+        sample_row(spark, "ACGH1", "P2", "SMP2", "GPL201", "aCGH", ACGH_CATEGORY, path2,
+                   tissue="Blood"),
+    ], key=repr)
+    assert sorted_rows(res.i2b2, "c_fullname", "c_visualattributes", "c_basecode") == (
+        node_rows(path1, path2)
+    )
+    # both samples over both regions, metrics typed
+    assert sorted_rows(res.data, "region_name", "chip", "flag") == [
+        ("chr1:100-200", 0.5, 1), ("chr1:100-200", 0.5, 1),
+        ("chr1:300-400", -0.5, -1), ("chr1:300-400", -0.5, -1),
+    ]
+
+
+def test_acgh_samples_take_their_own_platform(spark, tmp_path):
+    """A mapping over two region platforms: each sample's path carries
+    its own platform's title, and its data rows cover only the regions
+    of its own platform."""
+    res = load_acgh(spark, _acgh_dir(tmp_path, ("GPL201", "GPL202")), None, TOP)
+    paths = dict(res.sample_mapping.select("sample_cd", "concept_path").collect())
+    assert paths == {
+        "SMP1": TOP + "Biomarker Data\\aCGH\\aCGH Regions GPL201\\Tumor\\",
+        "SMP2": TOP + "Biomarker Data\\aCGH\\aCGH Regions GPL202\\Blood\\",
+    }
+    sample_of = dict(res.sample_mapping.select("assay_id", "sample_cd").collect())
+    regions = sorted(
+        (sample_of[a], r) for a, r in res.data.select("assay_id", "region_name").collect()
+    )
+    assert regions == [
+        ("SMP1", "chr1:100-200"), ("SMP1", "chr1:300-400"), ("SMP2", "chr1:100-200"),
+    ]

@@ -2,8 +2,17 @@ r"""VCF pipeline e2e on the reference fixture, mirroring the
 assertions of src/test/groovy/.../etl/VCFDataProcessorTest.groovy
 (311 LoC) — no database, all on DataFrames."""
 
+import os
+
 import pytest
-from conftest import needs_reference
+from conftest import (
+    REFERENCE_FIXTURES,
+    needs_reference,
+    node_rows,
+    sample_row,
+    sorted_rows,
+    write_lines,
+)
 from pyspark.sql import functions as sf
 
 from tmdataloader_spark.plans.vcf import load_vcf_study
@@ -170,22 +179,9 @@ def test_multi_vcf(spark):
     assert r["variant_value"] == "0|0:0.050:-0.03,-1.17,-5.00"
 
 
-def test_invalid_study_fixture_fails(spark):
-    """VCFDataProcessorTest.testItNotLoadsStudyWithWrongMapping: the
-    Invalid Studies fixture must abort."""
-    from tmdataloader_spark.operators.dedup import LoadValidationError
-
-    with pytest.raises(LoadValidationError):
-        load_vcf_study(
-            spark,
-            "/root/reference/fixtures/Invalid Studies/VCF/Study with Wrong Mapping",
-            "\\Invalid Studies\\Study with Wrong Mapping\\",
-        )
-
-
-def test_unmapped_samples_fail(spark, tmp_path):
-    from tmdataloader_spark.operators.dedup import LoadValidationError
-
+def _unmapped_sample_dir(tmp_path):
+    """A VCF upload dir whose VCF holds sample S2, which the mapping
+    lacks."""
     d = tmp_path / "vcf"
     d.mkdir()
     (d / "Subject_Sample_Mapping_File.txt").write_text(
@@ -196,8 +192,29 @@ def test_unmapped_samples_fail(spark, tmp_path):
         "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2\n"
         "1\t100\trs1\tA\tG\t50\tPASS\t.\tGT\t0/0\t0/1\n"
     )
+    return str(d)
+
+
+def test_invalid_study_fixture_fails(spark, tmp_path):
+    """VCFDataProcessorTest.testItNotLoadsStudyWithWrongMapping: a study
+    with a wrong mapping aborts on its mapping, not for want of one. The
+    study is the reference's Invalid Studies fixture where that tree
+    exists, else one whose VCF holds a sample the mapping lacks."""
+    from tmdataloader_spark.operators.dedup import LoadValidationError
+
+    study = os.path.join(REFERENCE_FIXTURES, "Invalid Studies", "VCF", "Study with Wrong Mapping")
+    if not os.path.isdir(REFERENCE_FIXTURES):
+        study = _unmapped_sample_dir(tmp_path)
+    with pytest.raises(LoadValidationError) as err:
+        load_vcf_study(spark, study, "\\Invalid Studies\\Study with Wrong Mapping\\")
+    assert "Mapping file not found" not in str(err.value)
+
+
+def test_unmapped_samples_fail(spark, tmp_path):
+    from tmdataloader_spark.operators.dedup import LoadValidationError
+
     with pytest.raises(LoadValidationError, match="S2"):
-        load_vcf_study(spark, str(d), TOP)
+        load_vcf_study(spark, _unmapped_sample_dir(tmp_path), TOP)
 
 
 @needs_reference
@@ -239,3 +256,35 @@ def test_multi_vcf_with_configured_paths(spark):
     assert r["variant_value"] == "0|0:0.050:-0.03,-1.17,-5.00"
     r2 = one(by_id["GSE0:VCFTEST2"].subject_detail, pos=16050408, rs_id="rs149201999")
     assert r2["variant_value"] == "0|1:0.900:-0.71,-0.09,-5.00"
+
+
+def test_small_study_samples_and_nodes(spark, tmp_path):
+    """A sample with a CATEGORY_CD is placed by it; one without lands
+    under ``VCF+<file name>``. The platform is ``VCF_<GENOME_BUILD>``
+    and each sample's source is the file's name, upper-cased."""
+    d = tmp_path / "VCFDataToUpload"
+    d.mkdir()
+    write_lines(d / "Subject_Sample_Mapping_File.txt", [
+        "# STUDY_ID: vcf1",
+        "# GENOME_BUILD: hg19",
+        "SUBJECT_ID\tSAMPLE_CD\tCATEGORY_CD",
+        "P1\tS1\tVCF+Subjects+First",
+        "P2\tS2\t",
+    ])
+    write_lines(d / "small.v1.vcf", [
+        "##fileformat=VCFv4.1",
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2",
+        "1\t100\trs1\tA\tG\t50\tPASS\t.\tGT\t0/0\t0/1",
+    ])
+    res = load_vcf_study(spark, str(d), TOP)
+    path1 = TOP + "VCF\\Subjects\\First\\"
+    path2 = TOP + "VCF\\small v1\\"
+    assert sorted_rows(res.sample_mapping) == sorted([
+        sample_row(spark, "VCF1", "P1", "S1", "VCF_hg19", "VCF", "VCF+Subjects+First",
+                   path1, source="SMALL_V1"),
+        sample_row(spark, "VCF1", "P2", "S2", "VCF_hg19", "VCF", "VCF+small_v1",
+                   path2, source="SMALL_V1"),
+    ], key=repr)
+    assert sorted_rows(res.i2b2, "c_fullname", "c_visualattributes", "c_basecode") == (
+        node_rows(path1, path2)
+    )

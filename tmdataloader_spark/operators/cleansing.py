@@ -2,22 +2,16 @@ r"""Clinical value/label/category cleansing chain (SURVEY.md §2.2 F1–F9).
 
 The reference runs ~10 sequential UPDATE/DELETE statements over
 ``wrk_clinical_data`` (sql/postgres/procedures/I2B2_LOAD_CLINICAL_DATA.sql:238-541).
-Here the whole chain is ONE narrow projection — no shuffle, fully
-codegen'd, and Catalyst fuses it with the scan. At 100 TB this is the
-difference between 10 passes over the data and 1.
+Here each step is a Column expression or a narrow frame transform, and
+``plans/clinical.py`` composes them into one projection — no shuffle,
+fully codegen'd, and Catalyst fuses it with the scan. At 100 TB this
+is the difference between 10 passes over the data and 1.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
-
-from tmdataloader_spark.functions.values import (
-    normalize_chars_category,
-    normalize_chars_label,
-    normalize_chars_value,
-    normalize_whitespace,
-)
 
 # Tag-marker normalization used to group rows "per category" while tag
 # values are still embedded: $$1A{Some Value} / $$1ASomeValue → $$1A
@@ -66,42 +60,6 @@ def label_pipe_to_comma(col: Column) -> Column:
     """F4: in data_label, ``|`` → ``,``
     (I2B2_LOAD_CLINICAL_DATA.sql:322-324)."""
     return F.regexp_replace(col, r"\|", ",")
-
-
-def strip_tag_markers(col: Column) -> Column:
-    r"""F9: unwrap ``$$<n><MANGLE>{text}`` tag markers back to ``text``
-    (I2B2_LOAD_CLINICAL_DATA.sql:373-375, marker injected by
-    etl/mappings/TagReplacer.groovy:19-44)."""
-    return F.regexp_replace(col, r"\$\$\d*[A-Z]?\{([^}]*)\}", "$1")
-
-
-def cleanse_clinical(
-    df: DataFrame,
-    value_col: str = "data_value",
-    label_col: str = "data_label",
-    category_col: str = "category_cd",
-    visit_col: str | None = None,
-) -> DataFrame:
-    """The full F1–F6+F9 chain as a single projection, with the
-    reference's PER-COLUMN replace sets
-    (I2B2_LOAD_CLINICAL_DATA.sql:437-461): value gets pipes+parens+the
-    value char set (no ``_``→space); label gets pipe→comma + the label
-    char set; category_cd gets tag-strip + only %/&; visit_name (when
-    present) gets whitespace normalization only."""
-    df = drop_empty_values(df, value_col)
-    value = fix_parens(fix_pipes(F.col(value_col)))
-    value = normalize_whitespace(normalize_chars_value(value))
-    label = label_pipe_to_comma(F.col(label_col))
-    label = normalize_whitespace(normalize_chars_label(label))
-    category = normalize_chars_category(strip_tag_markers(F.col(category_col)))
-    out = (
-        df.withColumn(value_col, value)
-        .withColumn(label_col, label)
-        .withColumn(category_col, category)
-    )
-    if visit_col is not None:
-        out = out.withColumn(visit_col, normalize_whitespace(F.col(visit_col)))
-    return out
 
 
 def normalize_tag_markers(col: Column | str) -> Column:
@@ -177,23 +135,5 @@ def suppress_terminated_path(
         label_col,
         F.when(terminated & ~p.contains("DATALABEL"), F.lit(None)).otherwise(
             F.col(label_col)
-        ),
-    )
-
-
-def dedup_label_vs_path_tail(
-    df: DataFrame,
-    category_col: str = "category_cd",
-    label_col: str = "data_label",
-) -> DataFrame:
-    r"""F8: when the last ``+``-separated category component equals the
-    data_label, chop it off the category so the label isn't doubled in
-    the leaf path (I2B2_LOAD_CLINICAL_DATA.sql:381-393)."""
-    last = F.element_at(F.split(F.col(category_col), r"\+"), -1)
-    chopped = F.regexp_replace(F.col(category_col), r"\+[^+]*$", "")
-    return df.withColumn(
-        category_col,
-        F.when(F.upper(last) == F.upper(F.col(label_col)), chopped).otherwise(
-            F.col(category_col)
         ),
     )

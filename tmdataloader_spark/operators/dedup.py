@@ -147,12 +147,3 @@ def study_id_report(
     if file_col is not None:
         aggs.append(F.count_distinct(F.col(file_col)).cast("long").alias("n_files"))
     return df.groupBy(F.col(study_col).alias("study_id")).agg(*aggs)
-
-
-def assert_single_study_id(df: DataFrame, study_col: str = "study_id") -> str:
-    """A10: exactly one distinct STUDY_ID per load
-    (etl/ClinicalDataProcessor.groovy:253-277)."""
-    ids = [r[0] for r in df.select(study_col).distinct().limit(2).collect()]
-    if len(ids) != 1 or ids[0] in (None, ""):
-        raise LoadValidationError(f"expected exactly one study id, got {ids}")
-    return ids[0]

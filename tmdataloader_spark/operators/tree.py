@@ -18,7 +18,7 @@ the plan that survives 100 TB (depth ≤ ~20 while n is unbounded).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from tmdataloader_spark.functions.paths import (
     get_last_path_component,
@@ -140,21 +140,6 @@ def move_subtree(df: DataFrame, old_path: str, new_path: str, path_col: str = "p
 def delete_subtree(df: DataFrame, root_path: str, path_col: str = "path") -> DataFrame:
     """T6/T9 building block: drop every node at-or-under a path."""
     return df.filter(~F.col(path_col).startswith(root_path))
-
-
-def first_existing_path_per_study(
-    i2b2: DataFrame, study_col: str = "sourcesystem_cd", path_col: str = "c_fullname"
-) -> DataFrame:
-    """W1: canonical (first-by-name) path of an existing study —
-    ``first_value(...) over (partition by sourcesystem_cd order by
-    c_fullname)`` (etl/AbstractDataProcessor.groovy:108-113)."""
-    w = Window.partitionBy(study_col).orderBy(path_col)
-    return (
-        i2b2.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .select(study_col, F.col(path_col).alias("first_path"))
-    )
 
 
 def add_nodes(

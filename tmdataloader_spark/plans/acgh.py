@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import re
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -27,15 +28,13 @@ from tmdataloader_spark.operators.dedup import LoadValidationError
 from tmdataloader_spark.plans.hdd import (
     build_hdd_nodes,
     build_sample_mapping,
-    read_sample_mapping,
-    validate_sample_mapping,
+    open_sample_mapping,
 )
 from tmdataloader_spark.sources.gpl import GplPlatform
 from tmdataloader_spark.sources.tsv import read_head_meta, read_tsv
 
 ACGH_METRICS = ["chip", "segmented", "flag", "probloss", "probnorm", "probgain", "probamp"]
 
-_MAPPING_RE = re.compile(r".+_Subject_Sample_Mapping_File(_GPL\d+)*\.txt$", re.I)
 _DATA_RE = re.compile(r".+_acgh_data(_GPL\d+)*\.txt$", re.I)
 
 
@@ -45,7 +44,7 @@ class AcghLoadResult:
     chromosomal_region: DataFrame  # de_chromosomal_region
     data: DataFrame  # de_subject_acgh_data
     i2b2: DataFrame
-    platform: GplPlatform
+    platforms: list[GplPlatform]  # one per platform the mapping names
 
 
 def read_chromosomal_regions(
@@ -198,59 +197,51 @@ def load_acgh(
     ``biomart.bio_marker`` frame to run the reference's post-load
     gene backfill on the regions (I2B2_LOAD_CHROM_REGION.sql:173-235)."""
     data_dir = str(data_dir)
-    entries = sorted(os.listdir(data_dir))
-    mapping_files = [f for f in entries if _MAPPING_RE.match(f)]
-    if not mapping_files:
-        raise LoadValidationError(f"no subject-sample mapping file in {data_dir}")
-    checked = read_sample_mapping(
-        spark, os.path.join(data_dir, mapping_files[0]), trial_id
-    )
-    mapping = checked.frame
-    if trial_id is None:
-        trial_id = checked.trial_id
-    validate_sample_mapping(checked)
-    platforms = checked.platforms
-    platform_file = next(
-        (
-            f
-            for f in (f"{platforms[0]}_region_platform.txt", f"{platforms[0]}.txt")
-            if os.path.exists(os.path.join(data_dir, f))
-        ),
-        None,
-    )
-    if platform_file is None:
-        raise LoadValidationError(f"no region platform file for {platforms[0]}")
-    platform = read_chromosomal_regions(
-        spark, os.path.join(data_dir, platform_file), platforms[0]
-    )
+    _, checked = open_sample_mapping(spark, data_dir, trial_id)
 
-    data_files = [f for f in entries if _DATA_RE.match(f)]
+    def read_platform(gpl: str) -> GplPlatform:
+        for name in (f"{gpl}_region_platform.txt", f"{gpl}.txt"):
+            path = os.path.join(data_dir, name)
+            if os.path.exists(path):
+                return read_chromosomal_regions(spark, path, gpl)
+        raise LoadValidationError(f"no region platform file for {gpl}")
+
+    platforms = [read_platform(gpl) for gpl in checked.platforms]
+
+    data_files = [f for f in sorted(os.listdir(data_dir)) if _DATA_RE.match(f)]
     if not data_files:
         raise LoadValidationError(f"no acgh data file in {data_dir}")
     wide = read_tsv(spark, os.path.join(data_dir, data_files[0]), header=True, comment="#")
-    long = melt_acgh_matrix(wide, trial_id)
+    long = melt_acgh_matrix(wide, checked.trial_id)
 
-    samples = build_sample_mapping(mapping, top_node, platform)
-    nodes = build_hdd_nodes(mapping, top_node, platform.title)
+    samples = build_sample_mapping(checked.frame, top_node, platforms)
+    nodes = build_hdd_nodes(samples)
 
-    regions = platform.annotation.select("region_name", "region_id")
+    # region files may differ in their optional columns
+    regions = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        (p.annotation for p in platforms),
+    )
     data = (
         long.join(
             F.broadcast(
                 samples.select(
-                    F.col("sample_cd").alias("expr_id"), "assay_id", "patient_id"
+                    F.col("sample_cd").alias("expr_id"), "assay_id", "patient_id", "gpl_id"
                 )
             ),
             on="expr_id",
             how="inner",
         )
-        .join(F.broadcast(regions), on="region_name", how="inner")
+        .join(
+            F.broadcast(regions.select("gpl_id", "region_name", "region_id")),
+            on=["gpl_id", "region_name"],
+            how="inner",
+        )
         .select(
             "trial_name", "region_id", "region_name", "assay_id", "patient_id",
             *ACGH_METRICS,
         )
     )
-    regions = platform.annotation
     if bio_marker is not None:
         regions = backfill_region_genes(regions, bio_marker)
     return AcghLoadResult(
@@ -258,5 +249,5 @@ def load_acgh(
         chromosomal_region=regions,
         data=data,
         i2b2=nodes,
-        platform=platform,
+        platforms=platforms,
     )

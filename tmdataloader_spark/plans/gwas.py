@@ -191,8 +191,8 @@ def load_gwas_plink(
     platform = GplPlatform(
         platform="", title="", organism="Homo sapiens", marker_type="GWAS", annotation=None
     )
-    samples = build_sample_mapping(mapping, top_node, platform)
-    nodes = build_hdd_nodes(mapping, top_node, platform.title)
+    samples = build_sample_mapping(mapping, top_node, [platform])
+    nodes = build_hdd_nodes(samples)
     return GwasPlinkLoadResult(
         study_id=study_id, plink_data=plink, sample_mapping=samples, i2b2=nodes
     )

@@ -21,19 +21,27 @@ broadcast; the single wide shuffle is the per-(probe, assay) collapse
 reuses the partitioning. Output is written partitioned by trial_name
 (the Spark replacement for per-study partition tables + index
 rebuild).
+
+Every sample-mapped loader (this module, snp, acgh, vcf, gwas) shares
+one sample spine, the reference's I2B2_LOAD_SAMPLES:
+``open_sample_mapping`` finds, reads and validates the mapping file;
+``build_sample_mapping`` templates each sample's concept path once,
+with the title of the sample's own platform; ``build_hdd_nodes`` builds
+the ontology from those paths. A mapping may name several platforms:
+each platform file is read, and each sample keeps only its own
+platform's probes.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 import re
 from dataclasses import dataclass
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from tmdataloader_spark.functions.paths import get_last_path_component, path_hlevel
 from tmdataloader_spark.operators.dedup import LoadValidationError
 from tmdataloader_spark.operators.reshape import melt_expression_matrix
 from tmdataloader_spark.operators.tree import fill_in_tree
@@ -43,10 +51,7 @@ from tmdataloader_spark.sources.tsv import read_tsv
 
 DEFAULT_TISSUE_TYPE = "Blood"  # ExpressionDataProcessor.groovy:33
 
-MAPPING_COLS = [
-    "STUDY_ID", "SITE_ID", "SUBJECT_ID", "SAMPLE_ID", "PLATFORM",
-    "TISSUETYPE", "ATTR1", "ATTR2", "CATEGORY_CD",
-]
+_MAPPING_RE = re.compile(r".+_Subject_Sample_Mapping_File(_GPL\d+)*\.txt$", re.I)
 
 
 @dataclass
@@ -55,7 +60,7 @@ class HDDLoadResult:
     data: DataFrame  # de_subject_<omics>_data
     i2b2: DataFrame  # ontology nodes incl. filled-in folders
     patient_dimension: DataFrame
-    platform: GplPlatform
+    platforms: list[GplPlatform]  # one per platform the mapping names
     #: the mapping's study id, the sourcesystem_cd of the sample facts
     trial_id: str
     observation_fact: DataFrame | None = None  # per-sample facts
@@ -211,73 +216,49 @@ def read_sample_mapping(
     )
 
 
-def build_hdd_nodes(
-    mapping: DataFrame,
-    top_node: str,
-    platform_title: str,
-    gpl_info: DataFrame | None = None,
-) -> DataFrame:
-    r"""Leaf-node templating (I2B2_LOAD_SAMPLES.sql:318-366):
-    PLATFORM→gpl title, TISSUETYPE/ATTR1/ATTR2 substituted, ``+``→``\``,
-    ``_``→space, backslash-runs collapsed; folders filled in.
-
-    With ``gpl_info`` (platform, title) the title is resolved PER ROW
-    via a broadcast left join — the reference's shape (:334-336), which
-    a mixed-platform or null-platform mapping needs (null platform →
-    empty substitution, collapsing the path segment). Without it the
-    scalar ``platform_title`` applies to every row (the single-platform
-    loaders' path)."""
-    if gpl_info is not None:
-        mapping = mapping.join(
-            F.broadcast(gpl_info.select("platform", "title")), "platform", "left"
-        )
-        title_col = F.coalesce(F.col("title"), F.lit(""))
-    else:
-        title_col = F.lit(platform_title)
-    subst = F.col("category_cd")
-    subst = F.replace(subst, F.lit("PLATFORM"), title_col)
-    subst = F.replace(subst, F.lit("ATTR1"), F.coalesce(F.col("attribute_1"), F.lit("")))
-    subst = F.replace(subst, F.lit("ATTR2"), F.coalesce(F.col("attribute_2"), F.lit("")))
-    subst = F.replace(
-        subst, F.lit("TISSUETYPE"),
-        F.coalesce(F.col("tissue_type"), F.lit("Unspecified Tissue Type")),
-    )
-    subst = F.regexp_replace(subst, r"\+", "\\\\")
-    subst = F.regexp_replace(subst, "_", " ")
-    leaf = F.regexp_replace(
-        F.concat(F.lit(top_node), subst, F.lit("\\")), r"(\\){2,}", "\\\\"
-    )
-    leaves = mapping.select(leaf.alias("path")).distinct()
-    nodes = fill_in_tree(leaves)
-    leaf_set = leaves.withColumn("is_leaf", F.lit(True))
-    return (
-        nodes.join(leaf_set, on="path", how="left")
-        .select(
-            F.col("path").alias("c_fullname"),
-            F.col("hlevel").alias("c_hlevel"),
-            F.col("name").alias("c_name"),
-            F.sha2(F.col("path"), 256).substr(1, 16).alias("c_basecode"),
-            F.when(F.coalesce(F.col("is_leaf"), F.lit(False)), F.lit("LAH"))
-            .otherwise(F.lit("FA"))
-            .alias("c_visualattributes"),
-        )
-    )
+def open_sample_mapping(
+    spark: SparkSession, data_dir: str, trial_id: str | None
+) -> tuple[str, SampleMapping]:
+    """The first ``*_Subject_Sample_Mapping_File*.txt`` of an HDD upload
+    directory, read and checked by its aborts: the loaders' shared first step
+    (I2B2_LOAD_SAMPLES.sql:94-193). With ``trial_id=None`` the file's
+    own STUDY_ID governs; either way the result's ``trial_id`` is the
+    upper-cased study id."""
+    names = [f for f in sorted(os.listdir(data_dir)) if _MAPPING_RE.match(f)]
+    if not names:
+        raise LoadValidationError(f"no subject-sample mapping file in {data_dir}")
+    path = os.path.join(data_dir, names[0])
+    checked = read_sample_mapping(spark, path, trial_id)
+    validate_sample_mapping(checked)
+    return path, checked
 
 
 def build_sample_mapping(
-    mapping: DataFrame, top_node: str, platform: GplPlatform
+    mapping: DataFrame, top_node: str, platforms: list[GplPlatform]
 ) -> DataFrame:
-    """de_subject_sample_mapping (I2B2_LOAD_SAMPLES.sql:659-830) with
+    r"""de_subject_sample_mapping (I2B2_LOAD_SAMPLES.sql:659-830) with
     deterministic surrogate ids: patient_num/assay_id hash the natural
-    keys (trial:site:subject, trial:sample) instead of DB sequences."""
+    keys (trial:site:subject, trial:sample) instead of DB sequences.
+
+    Each sample's concept path is templated here, once
+    (I2B2_LOAD_SAMPLES.sql:318-366): PLATFORM → the title of the row's
+    own platform (empty for a null or unknown one, which collapses the
+    segment, :334-336), TISSUETYPE/ATTR1/ATTR2 substituted, ``+``→``\``,
+    ``_``→space, backslash runs collapsed. ``build_hdd_nodes`` builds
+    the ontology from these paths. All of one loader's platforms share
+    a marker type, so ``platform`` is ``platforms[0]``'s."""
     usub = F.regexp_replace(
         F.concat_ws(
             ":", F.col("trial_name"), F.coalesce(F.col("site_id"), F.lit("")), F.col("subject_id")
         ),
         "(::)+", ":",
     )
+    titles = F.create_map(*(F.lit(v) for p in platforms for v in (p.platform, p.title)))
     subst = F.col("category_cd")
-    subst = F.replace(subst, F.lit("PLATFORM"), F.lit(platform.title))
+    subst = F.replace(
+        subst, F.lit("PLATFORM"),
+        F.coalesce(F.try_element_at(titles, F.col("platform")), F.lit("")),
+    )
     subst = F.replace(subst, F.lit("ATTR1"), F.coalesce(F.col("attribute_1"), F.lit("")))
     subst = F.replace(subst, F.lit("ATTR2"), F.coalesce(F.col("attribute_2"), F.lit("")))
     subst = F.replace(
@@ -309,7 +290,7 @@ def build_sample_mapping(
             )
         ).alias("assay_id"),
         "sample_cd",
-        F.lit(platform.marker_type).alias("platform"),
+        F.lit(platforms[0].marker_type).alias("platform"),
         F.col("platform").alias("gpl_id"),
         "tissue_type",
         "attribute_1",
@@ -323,6 +304,27 @@ def build_sample_mapping(
         leaf.alias("concept_path"),
         F.sha2(leaf, 256).substr(1, 16).alias("concept_code"),
         "source_cd",
+    )
+
+
+def build_hdd_nodes(samples: DataFrame) -> DataFrame:
+    """The ontology nodes of a ``build_sample_mapping`` frame: each
+    distinct concept path is a leaf (LAH), and ``fill_in_tree`` adds
+    its folders (FA)."""
+    leaves = samples.select(F.col("concept_path").alias("path")).distinct()
+    nodes = fill_in_tree(leaves)
+    leaf_set = leaves.withColumn("is_leaf", F.lit(True))
+    return (
+        nodes.join(leaf_set, on="path", how="left")
+        .select(
+            F.col("path").alias("c_fullname"),
+            F.col("hlevel").alias("c_hlevel"),
+            F.col("name").alias("c_name"),
+            F.sha2(F.col("path"), 256).substr(1, 16).alias("c_basecode"),
+            F.when(F.coalesce(F.col("is_leaf"), F.lit(False)), F.lit("LAH"))
+            .otherwise(F.lit("FA"))
+            .alias("c_visualattributes"),
+        )
     )
 
 
@@ -442,9 +444,6 @@ OMICS_TYPES = {
     ),
 }
 
-_MAPPING_RE = re.compile(r".+_Subject_Sample_Mapping_File(_GPL\d+)*\.txt$", re.I)
-
-
 def read_omics_platform(
     spark: SparkSession,
     path: str,
@@ -496,21 +495,10 @@ def read_omics_platform(
     )
 
 
-def load_expression(
-    spark: SparkSession,
-    data_dir: str | os.PathLike,
-    trial_id: str,
-    top_node: str,
-    log_base: float = 2.0,
-) -> HDDLoadResult:
-    """Expression load (``ExpressionDataToUpload``) — §3.3 end-to-end."""
-    return load_hdd(spark, data_dir, trial_id, top_node, "expression", log_base)
-
-
 def load_hdd(
     spark: SparkSession,
     data_dir: str | os.PathLike,
-    trial_id: str,
+    trial_id: str | None,
     top_node: str,
     omics: str = "expression",
     log_base: float = 2.0,
@@ -527,32 +515,26 @@ def load_hdd(
     I2B2_PROCESS_QPCR_MIRNA_DATA, I2B2_LOAD_RBM_DATA)."""
     ot = OMICS_TYPES[omics]
     data_dir = str(data_dir)
-    entries = sorted(os.listdir(data_dir))
-    mapping_files = [
-        os.path.join(data_dir, f) for f in entries if _MAPPING_RE.match(f)
-    ]
-    if not mapping_files:
-        raise LoadValidationError(f"no subject-sample mapping file in {data_dir}")
-    checked = read_sample_mapping(spark, mapping_files[0], trial_id)
-    mapping = checked.frame
-    if trial_id is None:  # the mapping file's own STUDY_ID governs
-        trial_id = checked.trial_id
+    _, checked = open_sample_mapping(spark, data_dir, trial_id)
+    trial = checked.trial_id
 
-    platforms = checked.platforms
-    platform_path = os.path.join(data_dir, f"{platforms[0]}.txt")
-    if ot.name == "expression":
-        platform = read_gpl(
-            spark, platform_path, platforms[0], marker_type=ot.marker_type,
-            use_first_gene_id=use_first_gene_id,
+    def read_platform(gpl: str) -> GplPlatform:
+        path = os.path.join(data_dir, f"{gpl}.txt")
+        if ot.name == "expression":
+            return read_gpl(
+                spark, path, gpl, marker_type=ot.marker_type,
+                use_first_gene_id=use_first_gene_id,
+            )
+        return read_omics_platform(
+            spark, path, gpl, ot.marker_type, trim_probe=ot.trim_probe
         )
-    else:
-        platform = read_omics_platform(
-            spark, platform_path, platforms[0], ot.marker_type,
-            trim_probe=ot.trim_probe,
-        )
+
+    platforms = [read_platform(gpl) for gpl in checked.platforms]
 
     matrix_files = [
-        os.path.join(data_dir, f) for f in entries if ot.data_file_re.match(f)
+        os.path.join(data_dir, f)
+        for f in sorted(os.listdir(data_dir))
+        if ot.data_file_re.match(f)
     ]
     if not matrix_files:
         raise LoadValidationError(f"no {ot.name} matrix in {data_dir}")
@@ -581,7 +563,7 @@ def load_hdd(
         if hdr[s_idx].strip().upper() != "SAMPID" and "ANALYTE" not in hdr[p_idx].upper():
             raise LoadValidationError(f"Incorrect {ot.name} data file")
         melted = wide.select(
-            F.lit(trial_id.upper()).alias("trial_name"),
+            F.lit(trial).alias("trial_name"),
             F.col(f"`{hdr[p_idx]}`").cast("string").alias("probeset_id"),
             F.col(f"`{hdr[s_idx]}`").cast("string").alias("expr_id"),
             F.col(f"`{hdr[v_idx]}`").cast("string").alias("intensity"),
@@ -599,23 +581,28 @@ def load_hdd(
             wide.columns[first_sample:] if first_sample is not None else None
         )
         melted = melt_expression_matrix(
-            wide, probe_col=id_col, trial=trial_id.upper(), sample_cols=sample_cols
+            wide, probe_col=id_col, trial=trial, sample_cols=sample_cols
         )
 
-    validate_sample_mapping(checked)
-    samples = build_sample_mapping(mapping, top_node, platform)
-    nodes = build_hdd_nodes(mapping, top_node, platform.title)
+    samples = build_sample_mapping(checked.frame, top_node, platforms)
+    nodes = build_hdd_nodes(samples)
     patients = upsert_sample_patients(samples, None)
 
     # J2: tag with assay ids (broadcast: samples ≪ matrix cells) and
-    # keep only probes known to the platform
-    probes = platform.annotation.select("probeset_id").distinct()
+    # keep only the probes the sample's own platform annotates
+    # (gpl_id=platform)
+    probes = reduce(
+        DataFrame.unionByName,
+        (p.annotation.select("gpl_id", "probeset_id") for p in platforms),
+    ).distinct()
     tagged = (
         melted.join(
-            F.broadcast(samples.select(F.col("sample_cd").alias("expr_id"), "assay_id")),
+            F.broadcast(
+                samples.select(F.col("sample_cd").alias("expr_id"), "assay_id", "gpl_id")
+            ),
             on="expr_id", how="inner",
         )
-        .join(F.broadcast(probes), on="probeset_id", how="left_semi")
+        .join(F.broadcast(probes), on=["gpl_id", "probeset_id"], how="left_semi")
     )
     # miRNA drops negative raws from a dataType-R FILE before the
     # probe collapse — the reference checks sign() on the file's
@@ -634,7 +621,7 @@ def load_hdd(
         log_round_types=ot.log_round_types,
     )
     data = scored.select(
-        F.lit(trial_id.upper()).alias("trial_name"),
+        F.lit(trial).alias("trial_name"),
         "probeset_id",
         "assay_id",
         F.col("raw_intensity"),
@@ -646,9 +633,9 @@ def load_hdd(
         data=data,
         i2b2=nodes,
         patient_dimension=patients,
-        platform=platform,
+        platforms=platforms,
         observation_fact=sample_facts(samples),
-        trial_id=checked.trial_id,
+        trial_id=trial,
     )
 
 
@@ -688,7 +675,7 @@ def read_sample_dimensions(
 def load_serial_hdd(
     spark: SparkSession,
     data_dir: str | os.PathLike,
-    trial_id: str,
+    trial_id: str | None,
     top_node: str,
     omics: str = "expression",
     log_base: float = 2.0,
@@ -706,8 +693,6 @@ def load_serial_hdd(
         spark, data_dir, trial_id, top_node, omics, log_base,
         use_first_gene_id=use_first_gene_id, use_t=use_t,
     )
-    if trial_id is None:
-        trial_id = result.trial_id
     dim_files = [
         os.path.join(str(data_dir), f)
         for f in sorted(os.listdir(str(data_dir)))
@@ -717,7 +702,7 @@ def load_serial_hdd(
         raise LoadValidationError(
             f"File with sample dimensions mapping was not found in {data_dir}!"
         )
-    dims = read_sample_dimensions(spark, dim_files[0], trial_id)
+    dims = read_sample_dimensions(spark, dim_files[0], result.trial_id)
     i2b2 = result.i2b2.join(
         F.broadcast(dims.select(F.col("category_cd").alias("c_name"), "c_metadataxml")),
         on="c_name",

@@ -14,8 +14,8 @@ kernel as already-log intensities (:170-376).
 from __future__ import annotations
 
 import os
-import re
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -24,13 +24,10 @@ from tmdataloader_spark.operators.zscore import zscore
 from tmdataloader_spark.plans.hdd import (
     build_hdd_nodes,
     build_sample_mapping,
-    read_sample_mapping,
-    validate_sample_mapping,
+    open_sample_mapping,
 )
-from tmdataloader_spark.sources.gpl import read_gpl
+from tmdataloader_spark.sources.gpl import GplPlatform, read_gpl
 from tmdataloader_spark.sources.tsv import read_tsv
-
-_MAPPING_RE = re.compile(r".+_Subject_Sample_Mapping_File(_GPL\d+)*\.txt$", re.I)
 
 
 @dataclass
@@ -41,7 +38,7 @@ class SnpLoadResult:
     gene_map: DataFrame  # de_snp_gene_map (novelty rows of this load)
     data: DataFrame  # copy-number z-scores (shared kernel)
     i2b2: DataFrame
-    platform: object
+    platforms: list[GplPlatform]  # one per platform the mapping names
 
 
 def _file_columns(spark: SparkSession, data_dir: str, mapping_path: str):
@@ -100,7 +97,7 @@ def snp_gene_map_novelty(incoming: DataFrame, existing: DataFrame | None) -> Dat
 def load_snp(
     spark: SparkSession,
     data_dir: str | os.PathLike,
-    trial_id: str,
+    trial_id: str | None,
     top_node: str,
     existing_gene_map: DataFrame | None = None,
     data_type: str = "L",
@@ -108,22 +105,14 @@ def load_snp(
 ) -> SnpLoadResult:
     """Full SNP load of an ``SNPDataToUpload`` directory."""
     data_dir = str(data_dir)
-    entries = sorted(os.listdir(data_dir))
-    mapping_files = [f for f in entries if _MAPPING_RE.match(f)]
-    if not mapping_files:
-        raise LoadValidationError(f"no subject-sample mapping file in {data_dir}")
-    mapping_path = os.path.join(data_dir, mapping_files[0])
-    checked = read_sample_mapping(spark, mapping_path, trial_id)
-    mapping = checked.frame
-    if trial_id is None:  # the mapping file's own STUDY_ID governs
-        trial_id = checked.trial_id
-    validate_sample_mapping(checked)
-
-    platforms = checked.platforms
-    platform = read_gpl(
-        spark, os.path.join(data_dir, f"{platforms[0]}.txt"), platforms[0],
-        marker_type="SNP", use_first_gene_id=use_first_gene_id,
-    )
+    mapping_path, checked = open_sample_mapping(spark, data_dir, trial_id)
+    platforms = [
+        read_gpl(
+            spark, os.path.join(data_dir, f"{gpl}.txt"), gpl,
+            marker_type="SNP", use_first_gene_id=use_first_gene_id,
+        )
+        for gpl in checked.platforms
+    ]
 
     calls_files, cn_files = _file_columns(spark, data_dir, mapping_path)
     if not calls_files and not cn_files:
@@ -131,8 +120,8 @@ def load_snp(
     calls = read_snp_calls(spark, calls_files) if calls_files else None
     cn = read_snp_copy_number(spark, cn_files) if cn_files else None
 
-    samples = build_sample_mapping(mapping, top_node, platform)
-    nodes = build_hdd_nodes(mapping, top_node, platform.title)
+    samples = build_sample_mapping(checked.frame, top_node, platforms)
+    nodes = build_hdd_nodes(samples)
     sample_dim = F.broadcast(
         samples.select(F.col("sample_cd").alias("gsm_num"), "assay_id", "patient_id")
     )
@@ -143,7 +132,7 @@ def load_snp(
     else:
         snp_data = cn if cn is not None else calls
     sample_snp_data = snp_data.join(sample_dim, on="gsm_num", how="inner").withColumn(
-        "trial_name", F.lit(trial_id.upper())
+        "trial_name", F.lit(checked.trial_id)
     )
 
     snp_dataset = (
@@ -158,9 +147,15 @@ def load_snp(
     )
 
     gene_map = snp_gene_map_novelty(
-        platform.annotation.select(
-            F.col("probeset_id").alias("snp_name"),
-            F.col("entrez_gene_id").try_cast("long").alias("entrez_gene_id"),
+        reduce(
+            DataFrame.unionByName,
+            (
+                p.annotation.select(
+                    F.col("probeset_id").alias("snp_name"),
+                    F.col("entrez_gene_id").try_cast("long").alias("entrez_gene_id"),
+                )
+                for p in platforms
+            ),
         ),
         existing_gene_map,
     )
@@ -179,7 +174,7 @@ def load_snp(
         )
         data = zscore(
             collapsed, data_type=data_type, probe_col="probeset_id", value_col="intensity"
-        ).withColumn("trial_name", F.lit(trial_id.upper()))
+        ).withColumn("trial_name", F.lit(checked.trial_id))
 
     return SnpLoadResult(
         sample_mapping=samples,
@@ -188,5 +183,5 @@ def load_snp(
         gene_map=gene_map,
         data=data,
         i2b2=nodes,
-        platform=platform,
+        platforms=platforms,
     )

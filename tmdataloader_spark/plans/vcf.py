@@ -199,8 +199,8 @@ def load_vcf_study(
         marker_type="VCF",
         annotation=None,
     )
-    samples = build_sample_mapping(mapping_df, top_node, platform)
-    nodes = build_hdd_nodes(mapping_df, top_node, platform.title)
+    samples = build_sample_mapping(mapping_df, top_node, [platform])
+    nodes = build_hdd_nodes(samples)
     for ds in datasets:
         ds.subject_summary = link_assays(ds.subject_summary, samples)
     return VcfLoadResult(

@@ -102,9 +102,3 @@ def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
         [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
     )
     return spark.createDataFrame(table, schema)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load driver testdata parquet tables as DataFrames (TESTDATA.md)."""
-    out = [spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names]
-    return out[0] if len(out) == 1 else out
