@@ -6,7 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tmdataloader_spark.session import get_spark
+from tmdataloader_spark.session import FULL_JIT, get_spark
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
@@ -82,10 +82,16 @@ def spark():
     # action and adaptive re-plan; the "simple" form skips the
     # per-operator detail section, which dominates on the large
     # clinical load and merge plans.  Results are unaffected.
+    # This one session lives for the whole suite, long enough for C2's
+    # code to pay back its compile time, so it keeps the full tiered JIT
+    # instead of the C1-only one-shot default.
     s = get_spark(
         "tmdataloader-tests",
         shuffle_partitions=8,
-        extra_conf={"spark.sql.ui.explainMode": "simple"},
+        extra_conf={
+            "spark.sql.ui.explainMode": "simple",
+            "spark.driver.defaultJavaOptions": FULL_JIT,
+        },
     )
     yield s
 

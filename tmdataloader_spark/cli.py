@@ -38,7 +38,7 @@ from tmdataloader_spark.plans.operations import (
     move_study_by_path,
     normalize_path,
 )
-from tmdataloader_spark.session import local_frame
+from tmdataloader_spark.session import FULL_JIT, local_frame
 
 __version__ = "0.3.0"
 
@@ -238,6 +238,31 @@ def merge_study_into_warehouse(
     return wh
 
 
+#: Local bytes a run reads (its data directory plus the warehouse) up to
+#: which the driver keeps ``get_spark``'s C1-only JIT.  A larger run
+#: lives long enough for C2's faster code to pay back its compile time
+#: (PERF_NOTES.md, "Upload path").
+ONE_SHOT_MAX_BYTES = 8 * 1024**2
+
+
+def driver_jit(*paths: str | None) -> dict[str, str]:
+    """``get_spark``'s ``extra_conf`` for a run over ``paths``: the full
+    tiered JIT once their local files hold more than
+    :data:`ONE_SHOT_MAX_BYTES`, else nothing (the C1-only default).  A
+    path that is not local (``hdfs://``, ``s3a://``) counts as empty."""
+    total = 0
+    for path in filter(None, paths):
+        for dirpath, _, names in os.walk(path):
+            for n in names:
+                try:
+                    total += os.path.getsize(os.path.join(dirpath, n))
+                except OSError:  # a dangling link
+                    continue
+            if total > ONE_SHOT_MAX_BYTES:
+                return {"spark.driver.defaultJavaOptions": FULL_JIT}
+    return {}
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="tm_etl",
@@ -405,8 +430,8 @@ def main(argv: list[str] | None = None) -> int:
         build_parser().print_help()
         return 2
 
-    spark = get_spark("tm_etl")
     wh_dir = args.warehouse
+    spark = get_spark("tm_etl", extra_conf=driver_jit(args.data_dir, wh_dir))
 
     # operations path (§3.4): bypasses directory processing
     if args.add_platform:

@@ -5,6 +5,17 @@ intent that matters on a 1000-executor cluster: AQE for runtime
 re-planning (skew joins, partition coalescing), shuffle partition count
 sized to the parallelism, Arrow for any Python exchange, and UTC
 timestamps for reproducibility.
+
+The driver JVM of a short one-shot run (a small ``tm_etl`` upload, a
+tool, a benchmark run) lives 10-40 s; under HotSpot's default tiered
+JIT its C2 compiler threads take most of its CPU compiling code that
+the process exits before it can run.  :data:`ONE_SHOT_JIT` makes
+HotSpot compile with C1 only, with a code cache large enough that it
+never fills (PERF_NOTES.md, "Upload path").  It applies to the driver
+JVM only, which in local mode also runs the executor tasks; executors
+on a cluster keep their own JIT.  A run long enough for C2's faster
+code to pay back its compile time (a large upload, the test suite's
+session) passes :data:`FULL_JIT` instead.
 """
 
 from __future__ import annotations
@@ -12,6 +23,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: ``spark.driver.defaultJavaOptions`` of every session :func:`get_spark`
+#: builds: C1 only, with a 240 MB code cache.  ``TieredStopAtLevel=1``
+#: alone leaves HotSpot one unsegmented 48 MB code cache, which a single
+#: upload fills to about 38 MB.
+ONE_SHOT_JIT = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
+
+#: HotSpot's default tiered JIT (C1, then C2 for hot code), as the
+#: ``spark.driver.defaultJavaOptions`` of a long-lived driver.
+FULL_JIT = "-XX:TieredStopAtLevel=4"
 
 
 def default_driver_memory() -> str:
@@ -43,6 +64,13 @@ def get_spark(
     - Arrow enabled so any Pandas-UDF exchange is columnar.
     - Driver heap from ``SPARK_GRAFT_DRIVER_MEM``, else
       :func:`default_driver_memory`.
+    - Driver JIT sized for a short-lived process: :data:`ONE_SHOT_JIT`
+      (C1 only, 240 MB code cache) as ``spark.driver.defaultJavaOptions``,
+      which replaces a site's own setting of that key; a site's or
+      caller's ``spark.driver.extraJavaOptions`` still applies, after
+      it.  It only takes effect when this call launches the driver JVM.
+      A long-lived session passes ``{"spark.driver.defaultJavaOptions":
+      FULL_JIT}`` in ``extra_conf``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
@@ -66,6 +94,7 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.defaultJavaOptions", ONE_SHOT_JIT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
